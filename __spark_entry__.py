@@ -26,7 +26,7 @@ from pyspark.sql import functions as F
 
 from rustserini_spark.analysis import LUCENE_ENGLISH_STOPWORDS
 from rustserini_spark.functions.parity import r4, sql_r4
-from rustserini_spark.session import fan_out
+from rustserini_spark.session import barrier, fan_out, scratch_dir
 from rustserini_spark.functions.text import (
     BPE_ISH_PATTERN,
     LANG_MARKERS,
@@ -1298,11 +1298,9 @@ def q_bm25_topk_topics(spark, sf_dir):
     """Same engine as bm25_topk_simple but the query set arrives through the
     topics loader (reference query-ingestion surface,
     /root/reference/src/query_iterator.rs:1-13): TSV topics -> (qid, query)."""
-    import tempfile
-
     from rustserini_spark.sources.topics import queries_from_topics, read_topics_tsv
 
-    d = tempfile.mkdtemp(prefix="topics_")
+    d = scratch_dir(spark, "topics")
     with open(f"{d}/topics.tsv", "w") as f:
         for qid, q in BM25_QUERIES:
             f.write(f"{qid}\t{q}\n")
@@ -1537,15 +1535,10 @@ def q_lsh_neardup_recall(spark, sf_dir):
     constant-TRUE."""
     from rustserini_spark.operators.similarity import cosine_neardup_pairs
 
-    import tempfile
-
     # materialize the planted union once: it is derived three times below
     # (the LSH bucket pass, the exact verify's driver-side matrix collect,
     # and the exact verify's distributed map pass)
-    emb = _emb_with_planted(spark, sf_dir)
-    _p = tempfile.mkdtemp(prefix="emb_planted_")
-    emb.write.mode("overwrite").parquet(_p)
-    emb = spark.read.parquet(_p)
+    emb = barrier(_emb_with_planted(spark, sf_dir), "emb_planted")
     approx = lsh_neardup_pairs(emb, dim=_emb_dim(sf_dir), threshold=0.95, n_planes=8)
     exact = cosine_neardup_pairs(emb, threshold=0.95)
     gate = float(LSH_NEARDUP_RECALL_GATE)
@@ -1667,12 +1660,10 @@ def _ann_topk_ivf(spark, sf_dir):
     (build once -> probe with partition pruning — the 100 TB path; VERDICT r3
     #4). Consumed by q_ann_ivf_recall; indexed==per-call parity asserted in
     tests/test_similarity.py."""
-    import tempfile
-
     from rustserini_spark.operators.similarity import build_ivf_index, ivf_ann_topk_indexed
 
     emb = _emb(spark, sf_dir)
-    base = tempfile.mkdtemp(prefix="ivf_entry_")
+    base = scratch_dir(spark, "ivf_entry")
     ivf = build_ivf_index(emb, dim=_emb_dim(sf_dir), base_dir=base, n_centroids=16)
     return ivf_ann_topk_indexed(
         spark, ivf, emb.filter(F.col("vec_id") < EMB_QUERY_MAX_ID), k=10, n_probe=8
@@ -1895,12 +1886,7 @@ def _new_snapshot(spark, sf_dir):
 
 
 def _base_sig_table(spark, sf_dir):
-    import tempfile
-
-    return build_minhash_table(
-        _docs(spark, sf_dir).select("doc_id", "text"),
-        tempfile.mkdtemp(prefix="incr_sig_"),
-    )
+    return build_minhash_table(_docs(spark, sf_dir).select("doc_id", "text"))
 
 
 def q_minhash_probe_pairs(spark, sf_dir):

@@ -107,76 +107,6 @@ def _analyze_series(s: pd.Series) -> pd.Series:
 
 analyze_udf = F.pandas_udf(_analyze_series, ArrayType(StringType()))
 
-# ---- map-side term frequencies ------------------------------------------
-# tf is a per-document computation, so the analyzer can emit the EXPLODED
-# (term, doc_id, dl, tf) relation directly from one Arrow pass: no corpus
-# groupBy for tf, no nested map/array columns crossing the Arrow boundary
-# (map serialization and JVM map-explode measured 3-5x slower), just flat
-# numpy columns. At 10^12 docs this removes a full-corpus exchange AND keeps
-# the Python<->JVM hop at primitive-column speed.
-
-
-def term_freq_batches_factory(analyze_fn):
-    """mapInPandas generator: (doc_id, <text>) batches -> (term, doc_id, dl, tf, seg).
-
-    ``seg`` is the doc's *segment id*, assigned here — the one place where a
-    document's rows are provably all together — so every doc belongs to
-    exactly one segment no matter how downstream joins or Arrow batch splits
-    reorder the relation. Segments are doc-disjoint by construction, which is
-    the invariant the sharded query evaluation and the segment-local posting
-    encoder rely on.
-    """
-    import numpy as np
-    from collections import Counter
-
-    SEG_DOCS = 65536  # docs per segment: bounds the whole-segment encode group
-
-    def gen(batches):
-        from pyspark import TaskContext
-
-        ctx = TaskContext.get()
-        pid = ctx.partitionId() if ctx else 0
-        seg_counter = 0
-        for pdf in batches:
-            if pdf.empty:
-                continue
-            doc_ids = pdf.iloc[:, 0].to_numpy()
-            texts = pdf.iloc[:, 1]
-            for lo in range(0, len(pdf), SEG_DOCS):
-                hi = min(lo + SEG_DOCS, len(pdf))
-                seg = (pid << 32) | seg_counter  # int64: same scheme as the
-                # one-pass encoder (index_build.encode_docs_factory) — partition
-                # ids to 2^31 and 2^32 segments per task, no overflow at scale
-                seg_counter += 1
-                terms, docs, dls, tfs = [], [], [], []
-                for doc_id, text in zip(doc_ids[lo:hi], texts.iloc[lo:hi]):
-                    toks = analyze_fn(text)
-                    if not toks:
-                        continue
-                    c = Counter(toks)
-                    n = len(c)
-                    terms.extend(c.keys())
-                    tfs.extend(c.values())
-                    docs.append(np.full(n, doc_id, dtype=np.int64))
-                    dls.append(np.full(n, len(toks), dtype=np.int64))
-                if not terms:
-                    continue
-                yield pd.DataFrame(
-                    {
-                        "term": np.asarray(terms, dtype=object),
-                        "doc_id": np.concatenate(docs),
-                        "dl": np.concatenate(dls),
-                        "tf": np.asarray(tfs, dtype=np.int64),
-                        "seg": np.int64(seg),
-                    }
-                )
-
-    return gen
-
-
-TF_RELATION_SCHEMA = "term string, doc_id long, dl long, tf long, seg long"
-
-
 def analyze_col(text: Column | str) -> Column:
     """tokens = analyze(text); Arrow-vectorized, shared by index & query paths."""
     return analyze_udf(F.col(text) if isinstance(text, str) else text)

@@ -248,18 +248,3 @@ def encode_runs_blocks(
             buf[s:e] for s, e in zip(block_byte_starts, block_byte_ends)
         ],
     }
-
-
-def make_blocks(
-    doc_ids: np.ndarray,
-    tfs: np.ndarray,
-    dls: np.ndarray,
-    block_size: int = BLOCK_SIZE_DEFAULT,
-):
-    """Row-dict view over encode_runs_blocks for a single posting list (tests
-    and small callers)."""
-    cols = encode_runs_blocks(
-        np.zeros(np.asarray(doc_ids).size, dtype=np.int64), doc_ids, tfs, dls, block_size
-    )
-    for i in range(len(cols["postings_bin"])):
-        yield {k: (cols[k][i] if k != "run_idx" else int(cols[k][i])) for k in cols}

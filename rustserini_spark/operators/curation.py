@@ -34,7 +34,7 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, functions as F
 
 from rustserini_spark.functions.parity import r4
-from rustserini_spark.session import fan_out
+from rustserini_spark.session import barrier, fan_out, filter_unpushed, scratch_dir
 from rustserini_spark.functions.text import (
     _STOP_SORTED,
     _count_in,
@@ -83,8 +83,6 @@ def curate_corpus(
     # and Catalyst's pushdown would substitute the full tokenize+feature
     # tree per reference below the projection — the pushed form re-tokenized
     # every row ~5x (measured 5.1s vs 1.1s for this stage at 50k docs).
-    from rustserini_spark.session import filter_unpushed
-
     kept = filter_unpushed(
         feat,
         F.col("lang_pred").isin(list(langs))
@@ -99,11 +97,7 @@ def curate_corpus(
     # measured 8.5s -> ~3s at sf1.0 (and the unpushed filter takes the
     # barrier-write job itself from ~5s to ~1s). Same build-once policy as
     # the minhash signature table.
-    import tempfile
-
-    _p = tempfile.mkdtemp(prefix="curate_kept_")
-    kept.write.mode("overwrite").parquet(_p)
-    kept = docs.sparkSession.read.parquet(_p)
+    kept = barrier(kept, "curate_kept")
 
     # exact dedup: keeper agg (map-side combined) + semi join on (hash, id)
     kept = kept.withColumn("_text_hash", F.md5(F.col(text_col)))
@@ -113,9 +107,7 @@ def curate_corpus(
     # (the SimHash signature pass, the final keeper semi-join, the output
     # projection) — without it each re-runs the md5 agg + semi-join chain
     # (measured ~2x the remaining wall at sf1.0)
-    _p2 = tempfile.mkdtemp(prefix="curate_exact_")
-    kept.write.mode("overwrite").parquet(_p2)
-    kept = docs.sparkSession.read.parquet(_p2)
+    kept = barrier(kept, "curate_exact")
 
     # near-dup dedup: identical-SimHash keeper over the exact-dedup survivors
     sh = simhash64_signatures(kept, text_col, id_col)
@@ -452,8 +444,6 @@ def training_mix_sample(
     # tokenize tree), Catalyst's pushdown would substitute that whole tree
     # per reference below the projection. Pinning the filter above the
     # projection costs nothing and removes the duplication.
-    from rustserini_spark.session import filter_unpushed
-
     return filter_unpushed(docs, u < F.coalesce(rate, F.lit(0.0)))
 
 
@@ -499,14 +489,13 @@ def lm_perplexity_scores(
 
     The LM relation is consumed TWICE (the term join and the (N, V) agg), so
     when trained inline it is materialized to parquet first (``lm_path``, a
-    temp dir by default) — otherwise Catalyst re-derives the count subtree
-    per consumer and the corpus is scanned three times instead of once (the
-    train-once/score-many split; same policy as the minhash signature table).
+    session scratch dir by default, deleted on ``spark.stop()``) — otherwise
+    Catalyst re-derives the count subtree per consumer and the corpus is
+    scanned three times instead of once (the train-once/score-many split;
+    same policy as the minhash signature table).
     """
     if lm is None:
-        import tempfile
-
-        path = lm_path or tempfile.mkdtemp(prefix="unigram_lm_")
+        path = lm_path or scratch_dir(docs.sparkSession, "unigram_lm")
         unigram_lm(docs, text_col, id_col).write.mode("overwrite").parquet(path)
         lm = docs.sparkSession.read.parquet(path)
     stats = lm.agg(

@@ -37,6 +37,7 @@ from pyspark.sql import DataFrame, functions as F
 
 from rustserini_spark.functions.parity import r4
 from rustserini_spark.functions.text import shingles_col, with_tokens
+from rustserini_spark.session import barrier, fan_out, filter_unpushed, scratch_dir
 
 N_MINHASHES = 16
 N_BANDS = 8  # rows-per-band = 2
@@ -95,8 +96,6 @@ def doc_shingles(
     ``distinct=False`` skips a whole shuffle for consumers where multiset vs
     set makes no difference (minhash: min over duplicates == min over set).
     """
-    from rustserini_spark.session import fan_out
-
     # fan_out: tokenize+explode is the heavy pre-shuffle map pass of every
     # shingle consumer; a single-file input would otherwise run it 1-task
     # (no-op for many-partition inputs — see session.fan_out)
@@ -107,7 +106,9 @@ def doc_shingles(
     return out.distinct() if distinct else out
 
 
-def minhash_signatures(shingled: DataFrame, n_hashes: int = N_MINHASHES) -> DataFrame:
+def minhash_signatures(
+    shingled: DataFrame, n_hashes: int = N_MINHASHES, with_sets: bool = False
+) -> DataFrame:
     """(doc_id, h0..h{n-1}) bigint lanes: minhash_i = min((A[i]*h + B[i]) % P)
     over the per-shingle base hash h = int(md5(shingle)[:7 hex]).
 
@@ -116,14 +117,20 @@ def minhash_signatures(shingled: DataFrame, n_hashes: int = N_MINHASHES) -> Data
     the oracle replays every lane exactly. Long lanes also keep the 16-way
     min agg in HashAggregate (string lanes forced SortAggregate: var-length
     agg buffers can't hash-aggregate, and the sort was pure overhead).
+
+    ``with_sets`` adds the doc's sorted 64-bit-hashed shingle set as ``_arr``
+    in the same aggregation (see ``build_minhash_table``).
     """
     h = F.conv(F.substring(F.md5(F.col("shingle")), 1, 7), 16, 10).cast("long")
-    based = shingled.select("doc_id", h.alias("_h"))
+    cols, extra = [h.alias("_h")], []
+    if with_sets:
+        cols.append(F.xxhash64("shingle").alias("_sh64"))
+        extra.append(F.sort_array(F.collect_set("_sh64")).alias("_arr"))
     aggs = [
         F.min((F.lit(MINHASH_A[i]) * F.col("_h") + F.lit(MINHASH_B[i])) % F.lit(MINHASH_P)).alias(f"h{i}")
         for i in range(n_hashes)
     ]
-    return based.groupBy("doc_id").agg(*aggs)
+    return shingled.select("doc_id", *cols).groupBy("doc_id").agg(*aggs, *extra)
 
 
 def minhash_lsh_pairs(
@@ -160,17 +167,13 @@ def minhash_lsh_pairs(
         # whole shingle+min-agg subtree per side (plan-verified: two full
         # corpus subtrees, zero ReusedExchange) — one pass + a fixed-width
         # parquet barrier is strictly cheaper at every scale.
-        import tempfile
-
-        sig = build_minhash_table(
-            docs, tempfile.mkdtemp(prefix="minhash_sig_"), text_col, id_col, n_hashes
-        )
+        sig = build_minhash_table(docs, None, text_col, id_col, n_hashes)
     return _banded_pairs(sig, n_hashes, n_bands, max_bucket)
 
 
 def build_minhash_table(
     docs: DataFrame,
-    path: str,
+    path: str | None = None,
     text_col: str = "text",
     id_col: str = "doc_id",
     n_hashes: int = N_MINHASHES,
@@ -181,6 +184,8 @@ def build_minhash_table(
     build-once/probe-many split (pass the result as ``sig`` to
     minhash_lsh_pairs). One corpus pass regardless of how many LSH calls
     consume it; the table is ~n_hashes*32 bytes per doc, tiny next to text.
+    ``path`` defaults to a session scratch dir (session.scratch_dir); pass a
+    durable path to reuse the table across sessions.
 
     ``with_sets``: additionally emit the doc's 64-bit-hashed shingle SET as a
     sorted ``_arr`` column in the SAME aggregation — for an inline verify
@@ -190,6 +195,7 @@ def build_minhash_table(
     only need the lanes are unaffected either way because parquet scans
     prune the column."""
     spark = docs.sparkSession
+    path = path or scratch_dir(spark, "minhash_sig")
     # distinct=False: min over the shingle MULTISET equals min over the set
     # (min is idempotent under duplicates), so the 16-lane partial agg runs
     # map-side directly on the exploded relation and the only exchange is
@@ -197,24 +203,7 @@ def build_minhash_table(
     # every (doc_id, shingle-string) row (~40 bytes x shingle count) just to
     # dedup before an agg that never needed the dedup.
     shingled = doc_shingles(docs, text_col, id_col, distinct=False)
-    if with_sets:
-        h = F.conv(F.substring(F.md5(F.col("shingle")), 1, 7), 16, 10).cast("long")
-        based = shingled.select(
-            "doc_id", h.alias("_h"), F.xxhash64("shingle").alias("_sh64")
-        )
-        aggs = [
-            F.min(
-                (F.lit(MINHASH_A[i]) * F.col("_h") + F.lit(MINHASH_B[i]))
-                % F.lit(MINHASH_P)
-            ).alias(f"h{i}")
-            for i in range(n_hashes)
-        ]
-        table = based.groupBy("doc_id").agg(
-            *aggs, F.sort_array(F.collect_set("_sh64")).alias("_arr")
-        )
-    else:
-        table = minhash_signatures(shingled, n_hashes)
-    table.write.mode("overwrite").parquet(path)
+    minhash_signatures(shingled, n_hashes, with_sets).write.mode("overwrite").parquet(path)
     return spark.read.parquet(path)
 
 
@@ -408,12 +397,7 @@ def minhash_probe_pairs(
         # docs). From a parquet-backed relation the build is a parallel
         # fixed-width scan, and repeat probes of the same snapshot reuse
         # the artifact instead of recomputing the subtree.
-        import tempfile
-
-        _p = tempfile.mkdtemp(prefix="probe_new_bands_")
-        new_bands.write.mode("overwrite").parquet(_p)
-        new_bands = new_docs.sparkSession.read.parquet(_p)
-        new_bands = F.broadcast(new_bands)
+        new_bands = F.broadcast(barrier(new_bands, "probe_new_bands"))
     n, b = new_bands.alias("n"), base_bands.alias("b")
     return (
         n.join(
@@ -513,16 +497,12 @@ def ngram_jaccard_pairs(
         # semantics. Docs whose every shingle is capped away drop out of
         # the relation entirely — result-exact, since an empty array can
         # produce neither a prefix row nor a nonzero n_common.
-        import tempfile
-
-        full = (
+        full = barrier(
             occ.groupBy("doc_id")
             .agg(F.sort_array(F.collect_set("shingle")).alias("_af"))
-            .withColumn("n_sh", F.size("_af"))
+            .withColumn("n_sh", F.size("_af")),
+            "jaccard_full",
         )
-        _p0 = tempfile.mkdtemp(prefix="jaccard_full_")
-        full.write.mode("overwrite").parquet(_p0)
-        full = docs.sparkSession.read.parquet(_p0)
         ex = full.select("doc_id", "n_sh", F.explode("_af").alias("shingle"))
         keep = (
             ex.groupBy("shingle")
@@ -543,11 +523,7 @@ def ngram_jaccard_pairs(
     # and Catalyst would otherwise re-derive the tokenize+agg subtree per
     # consumer. Strictly smaller than an occurrence-level barrier (one row
     # per doc vs one per (doc, shingle)).
-    import tempfile
-
-    _p = tempfile.mkdtemp(prefix="jaccard_docs_")
-    docs_rel.write.mode("overwrite").parquet(_p)
-    docs_rel = docs.sparkSession.read.parquet(_p)
+    docs_rel = barrier(docs_rel, "jaccard_docs")
 
     # AllPairs/PPJoin prefix filtering, strengthened to a 2-share guarantee
     # (exact): a pair can only reach the final filter if round4(J) >= t,
@@ -637,8 +613,6 @@ def ngram_jaccard_pairs(
     # into the join condition with the defining expression substituted,
     # evaluating array_intersect 2-3x per candidate row (plan-verified); the
     # pin keeps one intersection per pair in the projection.
-    from rustserini_spark.session import filter_unpushed
-
     return (
         filter_unpushed(
             verified.withColumn(
@@ -707,16 +681,14 @@ def minhash_verified_pairs(
     2-3 full shingle+16-way-min-agg corpus passes — the build-once/probe-many
     split (``build_minhash_table``) is the only scale-safe shape, and making
     the composed op default to the non-scale-safe variant was round-6 verdict
-    #3. When ``sig`` is None the table is built ONCE to ``sig_path`` (a temp
-    dir if not given — pass an explicit path at real scale so the artifact
-    lands on durable storage and later calls reuse it) as an EAGER side
-    effect at op-construction time, then every branch reads the fixed-width
-    columnar table.
+    #3. When ``sig`` is None the table is built ONCE to ``sig_path`` (a
+    session scratch dir if not given, deleted on ``spark.stop()`` — pass an
+    explicit path at real scale so the artifact lands on durable storage and
+    later calls reuse it) as an EAGER side effect at op-construction time,
+    then every branch reads the fixed-width columnar table.
     """
     inline_arrs = None
     if sig is None:
-        import tempfile
-
         # inline build: emit the hashed shingle-set array IN THE SAME
         # aggregation as the 16 lanes (with_sets) — the verify then attaches
         # arrays straight from the signature barrier and the second
@@ -724,19 +696,10 @@ def minhash_verified_pairs(
         # Durable/caller-supplied tables stay fixed-width; that path keeps
         # the candidate-docs semi-join + re-tokenize below, which is the
         # scale shape (verify work ~ candidate set, table ~ 16 longs/doc).
-        sig = build_minhash_table(
-            docs,
-            sig_path or tempfile.mkdtemp(prefix="minhash_sig_"),
-            text_col,
-            id_col,
-            n_hashes,
-            with_sets=True,
-        )
+        sig = build_minhash_table(docs, sig_path, text_col, id_col, n_hashes, with_sets=True)
         inline_arrs = sig.select("doc_id", F.col("_arr").alias("_sh"))
         sig = sig.drop("_arr")
     cand = minhash_lsh_pairs(docs, text_col, id_col, n_hashes, n_bands, max_bucket, sig)
-    import tempfile
-
     if inline_arrs is None:
         # caller-supplied-table path: candidate pairs are consumed by TWO
         # branches below (the docs-level semi-join id set AND the verify
@@ -746,9 +709,7 @@ def minhash_verified_pairs(
         # the verified op). The inline path has a single consumer (arrays
         # attach straight from the signature barrier), so it skips the
         # barrier — one fewer write job.
-        cand_path = tempfile.mkdtemp(prefix="minhash_cand_")
-        cand.write.mode("overwrite").parquet(cand_path)
-        cand = docs.sparkSession.read.parquet(cand_path)
+        cand = barrier(cand, "minhash_cand")
     # semi-join reduction AT THE DOCS LEVEL: only docs in a candidate pair
     # need shingling in the verify, so the candidate-id set filters the RAW
     # docs before tokenization — tokenize + shingle-dedup work scales with
@@ -807,10 +768,9 @@ def minhash_verified_pairs(
             .select("doc_id", F.xxhash64("shingle").alias("shingle"))
             .distinct()
         )
-        arrs = sh.groupBy("doc_id").agg(F.collect_set("shingle").alias("_sh"))
-        arrs_path = tempfile.mkdtemp(prefix="minhash_varr_")
-        arrs.write.mode("overwrite").parquet(arrs_path)
-        arrs = docs.sparkSession.read.parquet(arrs_path)
+        arrs = barrier(
+            sh.groupBy("doc_id").agg(F.collect_set("shingle").alias("_sh")), "minhash_varr"
+        )
     else:
         # inline path: the arrays already sit in the signature barrier
         # (built with_sets in the same pass as the lanes) — the attach joins
@@ -833,8 +793,6 @@ def minhash_verified_pairs(
     # lands in a join condition with the full array_intersect expression
     # substituted 2-3x per candidate row — filter_unpushed keeps exactly one
     # intersection per pair in the projection.
-    from rustserini_spark.session import filter_unpushed
-
     return (
         filter_unpushed(
             cand.join(aa, "doc_a")
@@ -1050,8 +1008,6 @@ def simhash64_signatures(
                 out_fp[i] = (bits * _POW2).sum().astype(np.uint64).view(np.int64)
             yield pd.DataFrame({"doc_id": ids.astype(np.int64), "simhash": out_fp})
 
-    from rustserini_spark.session import fan_out
-
     pairs = fan_out(docs.select(F.col(id_col).cast("long"), F.col(text_col)))
     return pairs.mapInPandas(gen, "doc_id long, simhash long")
 
@@ -1084,7 +1040,7 @@ def simhash_bands(simhash_col, n_bands: int) -> list:
 
 def build_simhash_table(
     docs: DataFrame,
-    path: str,
+    path: str | None = None,
     text_col: str = "text",
     id_col: str = "doc_id",
 ) -> DataFrame:
@@ -1092,8 +1048,10 @@ def build_simhash_table(
     the read-back DataFrame — pass it as ``sig`` to simhash_neardup_pairs so
     the band self-join's branches scan a 16-byte-per-doc columnar table
     instead of re-running the full-corpus Arrow signature pass per branch
-    (2-3 corpus passes at 100 TB; round-5 verdict residual #4)."""
+    (2-3 corpus passes at 100 TB; round-5 verdict residual #4). ``path``
+    defaults to a session scratch dir (session.scratch_dir)."""
     spark = docs.sparkSession
+    path = path or scratch_dir(spark, "simhash_sig")
     simhash64_signatures(docs, text_col, id_col).write.mode("overwrite").parquet(path)
     return spark.read.parquet(path)
 
@@ -1134,11 +1092,7 @@ def simhash_neardup_pairs(
         # Arrow signature pass per side (plan-verified: two MapInPandas
         # nodes, zero reuse) — one corpus pass + a 16-byte-per-doc parquet
         # barrier is strictly cheaper at every scale.
-        import tempfile
-
-        sig = build_simhash_table(
-            docs, tempfile.mkdtemp(prefix="simhash_sig_"), text_col, id_col
-        )
+        sig = build_simhash_table(docs, None, text_col, id_col)
     sig = sig.select("doc_id", "simhash", *simhash_bands(F.col("simhash"), n_bands))
     bands = sig.select(
         "doc_id",

@@ -53,7 +53,6 @@ from pyspark.sql import types as T
 from rustserini_spark.analysis import analyze_col, simple_tokens_col
 from rustserini_spark.operators.compress import (
     BLOCK_SIZE_DEFAULT,
-    block_upper_bound,
     encode_runs_blocks,
 )
 
@@ -190,46 +189,6 @@ class BM25Index:
             for t in missing:
                 self._idf_memo.setdefault(t, None)  # negative-cache OOV
         return {t: v for t in terms if (v := self._idf_memo.get(t)) is not None}
-
-
-def tokenize_docs(docs: DataFrame, text_col: str, id_col: str, analyzer: str) -> DataFrame:
-    """(doc_id: long, tokens: array<string>) — the shared analysis entry point."""
-    tok = tokens_col_for(analyzer)
-    return docs.select(F.col(id_col).cast("long").alias("doc_id"), tok(text_col).alias("tokens"))
-
-
-def exploded_term_freqs(docs: DataFrame, text_col: str, id_col: str, analyzer: str) -> DataFrame:
-    """(term, doc_id, dl, tf, seg) — analysis + per-doc term counting in ONE
-    Arrow pass, emitted already exploded as flat primitive columns (inspection
-    / oracle surface; the index build itself encodes blocks in-pass and never
-    materializes this relation). Zero corpus shuffles."""
-    from rustserini_spark.analysis.analyzer import (
-        TF_RELATION_SCHEMA,
-        term_freq_batches_factory,
-    )
-
-    fn = analyze_fn_for(analyzer)
-    pairs = docs.select(F.col(id_col).cast("long").alias("doc_id"), F.col(text_col))
-    return pairs.mapInPandas(term_freq_batches_factory(fn), TF_RELATION_SCHEMA)
-
-
-def term_frequencies(tokens_df: DataFrame) -> DataFrame:
-    """(term, doc_id, dl, tf) from a legacy (doc_id, tokens) frame."""
-    return (
-        tokens_df.select(
-            "doc_id", F.size("tokens").alias("dl"), F.explode("tokens").alias("term")
-        )
-        .groupBy("term", "doc_id", "dl")
-        .agg(F.count(F.lit(1)).alias("tf"))
-    )
-
-
-def doclen_table(docs: DataFrame, tf: DataFrame, id_col: str = "doc_id") -> DataFrame:
-    """(doc_id, dl) for every doc, including zero-token docs (Lucene counts
-    them in maxDoc)."""
-    per_doc = tf.groupBy("doc_id").agg(F.first("dl").alias("dl"))
-    all_ids = docs.select(F.col(id_col).cast("long").alias("doc_id")).distinct()
-    return all_ids.join(per_doc, "doc_id", "left").fillna({"dl": 0})
 
 
 def doclen_from_postings(docs: DataFrame, postings: DataFrame, id_col: str = "doc_id") -> DataFrame:

@@ -42,25 +42,12 @@ import pandas as pd
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
-from rustserini_spark.functions.parity import r4
 from rustserini_spark.session import fan_out, local_rows_df
 
 
 def _r4_np(x: np.ndarray) -> np.ndarray:
     """NumPy twin of parity.r4 / sql_r4: floor(x*10000 + 0.5) / 10000."""
     return np.floor(x * 10000.0 + 0.5) / 10000.0
-
-
-def _as_double(col):
-    return F.transform(col, lambda x: x.cast("double"))
-
-
-def _dot(a, b):
-    return F.aggregate(F.zip_with(a, b, lambda x, y: x * y), F.lit(0.0), lambda acc, x: acc + x)
-
-
-def _norm(a):
-    return F.sqrt(F.aggregate(F.transform(a, lambda x: x * x), F.lit(0.0), lambda acc, x: acc + x))
 
 
 def _collect_queries(queries: DataFrame, id_col: str, vec_col: str):
@@ -163,18 +150,6 @@ def dot_topk(
 ) -> DataFrame:
     """FAISS Flat/InnerProduct parity: exact max-inner-product top-k."""
     return _brute_topk(corpus, queries, k, "dot", "dot", id_col, vec_col)
-
-
-def cosine_scores(corpus: DataFrame, queries: DataFrame, id_col: str = "vec_id", vec_col: str = "embedding") -> DataFrame:
-    """(qid, vec_id, cos) for every (query, corpus) pair — full score matrix
-    (Catalyst fold; kept for exhaustive/debug use, top-k paths use the matmul)."""
-    q = queries.select(
-        F.col(id_col).alias("qid"), _as_double(F.col(vec_col)).alias("qvec")
-    )
-    c = corpus.select(F.col(id_col).alias("vec_id"), _as_double(F.col(vec_col)).alias("cvec"))
-    joined = c.crossJoin(F.broadcast(q))
-    cos = _dot(F.col("qvec"), F.col("cvec")) / (_norm(F.col("qvec")) * _norm(F.col("cvec")))
-    return joined.select("qid", "vec_id", r4(cos).alias("cos"))
 
 
 def cosine_neardup_pairs(corpus: DataFrame, threshold: float = 0.95, id_col: str = "vec_id", vec_col: str = "embedding") -> DataFrame:

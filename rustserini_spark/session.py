@@ -7,8 +7,41 @@ you would also set cluster-side (AQE, Arrow, shuffle partitions sized to cores).
 from __future__ import annotations
 
 import os
+import uuid
 
-from pyspark.sql import SparkSession
+from pyspark.sql import DataFrame, SparkSession
+
+# Every barrier and scratch path lives under this subdirectory of the
+# session's SparkFiles root. PySpark puts that root on the workers' sys.path,
+# so the hyphen (not a Python identifier) keeps barrier directories from ever
+# being importable and keeps the root's own listing to one entry.
+BARRIER_SUBDIR = "rs-barriers"
+
+
+def scratch_dir(spark: SparkSession, tag: str) -> str:
+    """A fresh, empty directory owned by ``spark``'s session.
+
+    It sits under ``SparkFiles.getRootDirectory()``, which follows
+    ``spark.local.dir``, and Spark deletes that root on ``spark.stop()`` (and
+    the whole local dir when the JVM exits) — so nothing written here
+    outlives the session, and no cleanup code exists on our side. The root
+    is local to the driver host, so barriers assume the executors see the
+    driver's filesystem (true in local mode)."""
+    root = spark.sparkContext._jvm.org.apache.spark.SparkFiles.getRootDirectory()
+    path = os.path.join(root, BARRIER_SUBDIR, f"{tag}-{uuid.uuid4().hex}")
+    os.makedirs(path)
+    return path
+
+
+def barrier(df: DataFrame, tag: str) -> DataFrame:
+    """Materialize once, read many: write ``df`` as parquet to a fresh
+    ``scratch_dir`` and return the read-back relation. Use it where a
+    relation feeds several consumers and Catalyst would otherwise re-derive
+    its subtree per consumer; the read-back plan is a plain columnar scan."""
+    spark = df.sparkSession
+    path = scratch_dir(spark, tag)
+    df.write.mode("overwrite").parquet(path)
+    return spark.read.parquet(path)
 
 
 def local_rows_df(spark: SparkSession, rows, schema):

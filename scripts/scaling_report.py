@@ -260,7 +260,6 @@ def run_once(workers: int, cores: int) -> dict:
     from pyspark.sql import functions as F
 
     from rustserini_spark import get_spark
-    from rustserini_spark.operators.index_build import tokenize_docs
     from rustserini_spark.operators.search import bm25_search_pruned
     from rustserini_spark.operators.webtext import index_webtext
 

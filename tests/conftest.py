@@ -14,6 +14,7 @@ SF_DIR = os.environ.get("SPARK_GRAFT_TEST_SF_DIR", "/root/testdata/sf0.001")
 def spark():
     s = get_spark("rustserini-spark-tests", master="local[8]", shuffle_partitions=8)
     yield s
+    s.stop()
 
 
 @pytest.fixture(scope="session")

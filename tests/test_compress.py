@@ -10,7 +10,6 @@ from rustserini_spark.operators.compress import (
     decode_posting_block,
     encode_posting_block,
     encode_runs_blocks,
-    make_blocks,
     varint_decode,
     varint_encode,
 )
@@ -65,7 +64,8 @@ def test_block_bound_is_upper_bound_under_any_global_stats():
     t = rng.integers(1, 50, 1000)
     l = rng.integers(10, 5000, 1000)
     k1, b = 0.9, 0.4
-    blocks = list(make_blocks(d, t, l, block_size=128))
+    cols = encode_runs_blocks(np.zeros(d.size, dtype=np.int64), d, t, l, block_size=128)
+    blocks = [{k: v[i] for k, v in cols.items()} for i in range(len(cols["postings_bin"]))]
     assert sum(bl["n_docs"] for bl in blocks) == 1000
     prev_last = -1
     for bl in blocks:

@@ -270,3 +270,14 @@ def test_simhash_rejects_non_integral_id(spark):
         simhash64_signatures(df)
     with pytest.raises(TypeError, match="integral"):
         curate_corpus(df)
+
+def test_minhash_lanes_identical_with_and_without_sets(documents):
+    """The inline verify's with_sets table and the fixed-width table share
+    one lane definition: every doc of the fixture gets identical h0..h15."""
+    lanes = ["doc_id"] + [f"h{i}" for i in range(16)]
+    docs = documents.select("doc_id", "text")
+    plain = build_minhash_table(docs).select(*lanes).collect()
+    with_sets = build_minhash_table(docs, with_sets=True)
+    assert "_arr" in with_sets.columns
+    assert sorted(plain) == sorted(with_sets.select(*lanes).collect())
+    assert len(plain) > 100

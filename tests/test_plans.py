@@ -13,7 +13,6 @@ from pyspark.sql import functions as F
 
 from rustserini_spark.operators.index_build import (
     build_index_checkpointed,
-    exploded_term_freqs,
     load_index,
 )
 from rustserini_spark.operators.search import bm25_search
@@ -47,14 +46,6 @@ def test_query_plan_uses_broadcast_joins(spark, saved_index):
     assert "BroadcastHashJoin" in plan or "BroadcastExchange" in plan
     # the big side (postings) must never be broadcast: no SortMergeJoin needed
     assert "SortMergeJoin" not in plan, plan[:1200]
-
-
-def test_mapside_tf_has_no_exchange(spark, documents):
-    """tf is a per-row computation after the map-side analyzer: the exploded
-    (term, doc) relation must contain ZERO shuffles."""
-    tf = exploded_term_freqs(documents, "text", "doc_id", "porter")
-    plan = _plan(tf)
-    assert "Exchange" not in plan, plan[:1200]
 
 
 def test_build_postings_has_zero_corpus_shuffles(spark, documents):
