@@ -55,6 +55,7 @@ from rustserini_spark.operators.compress import (
     BLOCK_SIZE_DEFAULT,
     encode_runs_blocks,
 )
+from rustserini_spark.session import col_in
 
 K1_DEFAULT = 0.9  # Anserini SimpleSearcher defaults (reference delegation at
 B_DEFAULT = 0.4  # /root/reference/src/searcher/lucene/searcher.rs:35)
@@ -180,7 +181,7 @@ class BM25Index:
         missing = [t for t in terms if t not in self._idf_memo]
         if missing:
             rows = (
-                self.dictionary.filter(F.col("term").isin(missing))
+                self.dictionary.filter(col_in("term", missing))
                 .select("term", "idf")
                 .collect()
             )

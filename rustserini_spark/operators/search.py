@@ -7,7 +7,7 @@ same lifecycle is a Spark plan:
 
   queries -> analyze (SAME UDF as indexing) -> (qid, term, qtf)
   -> broadcast-join dictionary (idf, per-term upper bound)        [O11]
-  -> isin-filter + join postings blocks (parquet min/max pruning) [O12]
+  -> IN-filter + join postings blocks (parquet min/max pruning)   [O12]
   -> score                                                        [O13]
   -> top-k with Lucene's tie-break (score desc, doc_id asc)       [O14]
 
@@ -46,7 +46,7 @@ from rustserini_spark.operators.compress import (
     decode_posting_block,
 )
 from rustserini_spark.operators.index_build import BM25Index, tokens_col_for
-from rustserini_spark.session import local_rows_df
+from rustserini_spark.session import col_in, local_rows_df
 
 # Above this many analyzed (qid, term) rows the pruned path's driver-side
 # query/idf closure stops being "tiny"; fall back to the fully distributed
@@ -131,8 +131,9 @@ def _matching_blocks(index: BM25Index, queries: DataFrame):
     """Join the analyzed query set with dictionary + posting blocks.
 
     Query analysis happens driver-side (tiny) and the term list becomes an
-    isin filter that Catalyst pushes into the parquet scan — at scale this is
-    what prunes a term-bucketed postings table down to a handful of files.
+    IN filter (one py4j call, ``col_in``) that Catalyst pushes into the
+    parquet scan — at scale this is what prunes a term-bucketed postings
+    table down to a handful of files.
     The (qid, term, qtf) frame is a single-partition broadcast.
     """
     spark = index.postings.sparkSession
@@ -140,8 +141,8 @@ def _matching_blocks(index: BM25Index, queries: DataFrame):
     if not terms:
         return None
     qt = local_rows_df(spark, qt_rows, "qid string, term string, qtf long").coalesce(1)
-    dict_sub = index.dictionary.filter(F.col("term").isin(terms)).select("term", "idf")
-    blocks = index.postings.filter(F.col("term").isin(terms))
+    dict_sub = index.dictionary.filter(col_in("term", terms)).select("term", "idf")
+    blocks = index.postings.filter(col_in("term", terms))
     return blocks.join(F.broadcast(qt), "term").join(F.broadcast(dict_sub), "term")
 
 
@@ -235,12 +236,12 @@ def _shard_topk(
     ``rows`` indexes this query's blocks within the shard's arrays; decoded
     blocks are memoized in ``decoded_cache`` so queries sharing head terms
     decode each block once per shard.
+
+    A query with at most ``CHUNK`` blocks on this shard is scored exactly with
+    every block decoded: pruning could skip at most one chunk of decodes, and
+    the MaxScore bookkeeping costs more than those decodes.
     """
-    weighted_max = qtf_row * max_impact[rows]
-    t_idx = term_idx[rows]
-    U = np.zeros(n_terms)
-    np.maximum.at(U, t_idx, weighted_max)
-    sumU = float(U.sum())
+    CHUNK = 16  # blocks decoded between θ re-tightenings
 
     def decode_rows(sub: np.ndarray):
         """sub: positions within `rows`. Returns (doc_ids, weighted_impacts)."""
@@ -271,6 +272,19 @@ def _shard_topk(
             return z.astype(np.int64), z
         return np.concatenate(parts_d), np.concatenate(parts_imp)
 
+    if rows.size <= CHUNK:
+        d, imp = decode_rows(np.arange(rows.size))
+        cand, inv = np.unique(d, return_inverse=True)
+        scores = np.zeros(cand.size)
+        np.add.at(scores, inv, imp)
+        order = np.lexsort((cand, -scores))[:k]
+        return cand[order], scores[order]
+
+    weighted_max = qtf_row * max_impact[rows]
+    t_idx = term_idx[rows]
+    U = np.zeros(n_terms)
+    np.maximum.at(U, t_idx, weighted_max)
+    sumU = float(U.sum())
     fd, ld = first_doc[rows], last_doc[rows]
 
     def exact_scores(cand: np.ndarray) -> np.ndarray:
@@ -299,7 +313,6 @@ def _shard_topk(
     cand = np.empty(0, dtype=np.int64)  # sorted candidate ids, exact scores
     cscores = np.empty(0)
     theta = 0.0
-    CHUNK = 16  # blocks decoded between θ re-tightenings
 
     for pos in range(t_order.size):
         if u_ord[pos] + suffix[pos] < theta:
@@ -418,7 +431,10 @@ def bm25_search_pruned(index: BM25Index, queries, k: int = 10) -> DataFrame:
         per_query, idf_by_term = _query_state()
         terms_arr = pdf["term"].to_numpy()
         uniq_terms, term_idx = np.unique(terms_arr, return_inverse=True)
-        rows_of = {t: np.flatnonzero(terms_arr == t) for t in uniq_terms}
+        # each term's rows, ascending: one stable sort of the term index
+        by_term = np.argsort(term_idx, kind="stable")
+        bounds = np.searchsorted(term_idx[by_term], np.arange(uniq_terms.size + 1))
+        rows_of = {t: by_term[bounds[i] : bounds[i + 1]] for i, t in enumerate(uniq_terms)}
         n_docs_arr = pdf["n_docs"].to_numpy(dtype=np.int64)
         first_doc = pdf["first_doc"].to_numpy(dtype=np.int64)
         last_doc = pdf["last_doc"].to_numpy(dtype=np.int64)
@@ -455,7 +471,7 @@ def bm25_search_pruned(index: BM25Index, queries, k: int = 10) -> DataFrame:
             }
         )
 
-    blocks = index.postings.filter(F.col("term").isin(terms))
+    blocks = index.postings.filter(col_in("term", terms))
     out_schema = "qid string, doc_id long, score double"
     if index.meta.get("doc_aligned"):
         # In-memory one-pass indexes are DOC-ALIGNED: every cached partition

@@ -152,6 +152,13 @@ def dot_topk(
     return _brute_topk(corpus, queries, k, "dot", "dot", id_col, vec_col)
 
 
+def _prefilter_pairs(raw: np.ndarray, pre: float, a_ids: np.ndarray, ids: np.ndarray):
+    """Cells (i, j) of a batch-by-corpus cosine block with raw >= ``pre`` and
+    a_ids[i] < ids[j]: the id order folds into the prefilter, so self-matches
+    and the reversed orientation of every pair never reach the rounding."""
+    return np.nonzero((raw >= pre) & (a_ids[:, None] < ids[None, :]))
+
+
 def cosine_neardup_pairs(corpus: DataFrame, threshold: float = 0.95, id_col: str = "vec_id", vec_col: str = "embedding") -> DataFrame:
     """(vec_a, vec_b, cos) for pairs with cosine >= threshold, vec_a < vec_b.
 
@@ -191,9 +198,9 @@ def cosine_neardup_pairs(corpus: DataFrame, threshold: float = 0.95, id_col: str
             mn = m / np.maximum(np.linalg.norm(m, axis=1, keepdims=True), 1e-300)
             a_ids = pdf[id_col].to_numpy().astype(np.int64)
             raw = mn @ matn.T
-            ai, bj = np.nonzero(raw >= pre)
+            ai, bj = _prefilter_pairs(raw, pre, a_ids, ids)
             cos = _r4_np(raw[ai, bj])
-            keep = (cos >= threshold) & (a_ids[ai] < ids[bj])
+            keep = cos >= threshold
             yield pd.DataFrame(
                 {"vec_a": a_ids[ai[keep]], "vec_b": ids[bj[keep]], "cos": cos[keep]}
             )

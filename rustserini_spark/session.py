@@ -9,7 +9,7 @@ from __future__ import annotations
 import os
 import uuid
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import Column, DataFrame, SparkSession
 
 # Every barrier and scratch path lives under this subdirectory of the
 # session's SparkFiles root. PySpark puts that root on the workers' sys.path,
@@ -96,26 +96,55 @@ def fan_out(df, target: int | None = None):
     return df
 
 
+def _sql_string(value: str) -> str:
+    # Backslash first, then the quote. ``$`` goes as a unicode escape because
+    # Spark's variable substitution rewrites ``${...}`` in the raw SQL text
+    # before the parser sees the literal.
+    esc = value.replace("\\", "\\\\").replace("'", "\\'").replace("$", "\\u0024")
+    return f"'{esc}'"
+
+
+def col_in(name: str, values) -> Column:
+    """``name IN ('v1', 'v2', ...)`` built in ONE py4j call.
+
+    ``F.col(name).isin(values)`` sends one ``functions.lit`` per value over
+    py4j (about four round trips each, counting the proxy frees), so a query
+    batch's driver cost grew with its distinct-term count; one ``F.expr`` of
+    the escaped literal list costs the same for 1 value or 50,000. Catalyst
+    still rewrites it to the same ``InSet`` filter and pushes it into the
+    parquet scan. Assumes the default ``spark.sql.parser.escapedStringLiterals
+    = false``. An empty ``values`` is ``lit(False)``."""
+    from pyspark.sql import functions as F
+
+    values = list(values)
+    if not values:
+        return F.lit(False)
+    quoted = name.replace("`", "``")
+    return F.expr(f"`{quoted}` IN ({', '.join(map(_sql_string, values))})")
+
+
 def filter_unpushed(df, cond):
-    """Filter WITHOUT letting Catalyst push the predicate below the child
-    projection.
+    """Filter WITHOUT letting Catalyst push the predicate below a repartition
+    or into a join condition.
 
     When a filter references columns computed by an expensive projection
     (tokenize + feature trees here), Catalyst's pushdown substitutes the FULL
-    defining expression per reference below the project — the projection then
-    runs once per referenced column plus once for the surviving rows (the
-    optimization guide documents the same pathology for UDFs, §4.4; it holds
-    for large pure-expression trees too, measured 5x on the curation feature
-    pass at 50k docs). OR-ing the predicate with an always-false
-    non-deterministic term (``monotonically_increasing_id() < 0`` — the id is
-    non-negative by construction: partition id << 33 + row offset) makes the
-    predicate non-deterministic, which pins it above the projection while
-    changing nothing about which rows survive. Use ONLY when every referenced
-    column is computed — a raw-column predicate would lose its parquet
-    PushedFilters entry (derived-column predicates never had one)."""
+    defining expression per reference wherever the predicate lands: below
+    the fan-out repartition it runs on the undivided scan, inside a join
+    condition once per candidate pair (the optimization guide documents the
+    same pathology for UDFs, §4.4; it holds for large pure-expression trees
+    too, measured 5x on the curation feature pass at 50k docs). OR-ing the
+    predicate with an always-false non-deterministic term
+    (``spark_partition_id() < 0`` — a partition id is a non-negative int)
+    makes the predicate non-deterministic, which Catalyst never moves through
+    a repartition or into a join, while changing nothing about which rows
+    survive. ``rand(0) < -1.0`` would not do: the optimizer folds it to false
+    and the pin is gone. Use ONLY when every referenced column is computed —
+    a raw-column predicate would lose its parquet PushedFilters entry
+    (derived-column predicates never had one)."""
     from pyspark.sql import functions as F
 
-    return df.filter(cond | (F.monotonically_increasing_id() < F.lit(0)))
+    return df.filter(cond | (F.spark_partition_id() < F.lit(0)))
 
 
 def get_spark(

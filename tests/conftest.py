@@ -25,3 +25,26 @@ def sf_dir():
 @pytest.fixture(scope="session")
 def documents(spark, sf_dir):
     return spark.read.parquet(f"{sf_dir}/documents.parquet")
+
+
+@pytest.fixture
+def py4j_round_trips(spark, monkeypatch):
+    """Counts py4j commands sent from this process to the JVM while the test
+    runs (calls, proxy frees from the finalizer thread included); the
+    gateway client's ``send_command`` is restored afterwards. The count is
+    the yielded object's ``n``."""
+    import threading
+    import types
+
+    client = spark.sparkContext._gateway._gateway_client
+    original = client.send_command
+    state = types.SimpleNamespace(n=0)
+    lock = threading.Lock()
+
+    def counting(*args, **kwargs):
+        with lock:
+            state.n += 1
+        return original(*args, **kwargs)
+
+    monkeypatch.setattr(client, "send_command", counting)
+    yield state

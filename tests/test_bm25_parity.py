@@ -283,3 +283,140 @@ def test_adaptive_cut_survives_boundary_rounded_ties(spark):
     assert sorted((r.rank, r.doc_id) for r in got.collect()) == [
         (k, k - 1) for k in range(1, 11)
     ]
+
+
+def test_batch_build_round_trips_independent_of_term_count(tiny_index, py4j_round_trips):
+    """Building a lazy pruned-search batch costs a fixed number of py4j round
+    trips: the term predicate is one ``col_in`` call, not one ``lit`` per
+    distinct term (thousands of round trips for a 512-query batch)."""
+    import gc
+
+    rng = np.random.default_rng(7)
+    letters = np.array(list("bcdfghjklmnpqrstvwxz"))
+
+    def word():
+        return "".join(rng.choice(letters, 12))
+
+    def round_trips(queries):
+        gc.collect()
+        before = py4j_round_trips.n
+        bm25_search_pruned(tiny_index, queries, k=10)
+        gc.collect()
+        return py4j_round_trips.n - before
+
+    one = round_trips([("q0", f"manhattan {word()}")])
+    batch = round_trips([(f"q{i}", f"{word()} {word()}") for i in range(512)])
+    assert batch <= one + 20, (one, batch)
+
+
+def test_porter_apostrophe_term_ranks(spark):
+    """Porter keeps internal apostrophes (``don't`` is one token), so the
+    quoted term must survive the scan predicate's SQL escaping."""
+    corpus = {
+        0: "I don't know.",
+        1: "Do not go there.",
+        2: "dont panic",
+        3: "Don't stop, don't stop the rock’n’roll",
+        4: "it's a donut",
+    }
+    docs = spark.createDataFrame(
+        pd.DataFrame({"doc_id": list(corpus), "text": list(corpus.values())})
+    )
+    index = build_index(spark, docs, block_size=4, seg_docs=3, n_shards=2)
+    for query in ("don't", "rock’n’roll don't"):
+        expected = bm25_rank(corpus, query, k=10)
+        assert 0 in [d for d, _ in expected]
+        for search in (bm25_search, bm25_search_pruned):
+            got = _collect(search(index, [("q", query)], k=10))["q"]
+            assert [d for _, d, _ in got] == [d for d, _ in expected], (search, query)
+            np.testing.assert_allclose([s for _, _, s in got], [s for _, s in expected], atol=1e-9)
+
+
+@pytest.fixture(scope="module")
+def zipf_segment():
+    """One block_size=8 segment over 1,024 docs drawn from a 60-word Zipf
+    vocabulary: head words span 100+ blocks, tail words a few. Returns the
+    corpus, each term's block count, and a function running ``_shard_topk``
+    for one query the way shard_search does (its prologue mirrored here)."""
+    import types
+
+    from rustserini_spark.analysis import simple_tokenize_text
+    from rustserini_spark.operators.compress import block_upper_bound
+    from rustserini_spark.operators.index_build import _encode_segment_pdf
+    from rustserini_spark.operators.search import _DecodeCache, _shard_topk
+
+    rng = np.random.default_rng(2024)
+    vocab = np.array([f"w{i}" for i in range(60)])
+    p = 1.0 / np.arange(1, 61) ** 1.5
+    p /= p.sum()
+    n = 1024
+    texts = [" ".join(rng.choice(vocab, int(rng.integers(5, 60)), p=p)) for _ in range(n)]
+    corpus = dict(enumerate(texts))
+    pdf = _encode_segment_pdf(
+        simple_tokenize_text, np.arange(n, dtype=np.int64), pd.Series(texts),
+        seg=0, block_size=8, n_shards=1,
+    )
+    terms_arr = pdf["term"].to_numpy()
+    uniq_terms, term_idx = np.unique(terms_arr, return_inverse=True)
+    toks = [set(simple_tokenize_text(t)) for t in texts]
+    idf_by = {t: expected_idf(sum(t in s for s in toks), n) for t in uniq_terms}
+    avgdl = sum(len(simple_tokenize_text(t)) for t in texts) / n
+    k1, b = 0.9, 0.4
+    idf = np.array([idf_by[t] for t in terms_arr])
+    max_impact = block_upper_bound(
+        pdf["max_tf"].to_numpy(), pdf["min_dl"].to_numpy(), idf, k1, b, avgdl
+    )
+    bufs = list(pdf["postings_bin"])
+    n_docs_arr = pdf["n_docs"].to_numpy(dtype=np.int64)
+    first_doc = pdf["first_doc"].to_numpy(dtype=np.int64)
+    last_doc = pdf["last_doc"].to_numpy(dtype=np.int64)
+
+    def search(query_terms, k, cache):
+        rows = np.concatenate([np.flatnonzero(terms_arr == t) for t in query_terms])
+        docs, scores = _shard_topk(
+            rows, np.ones(rows.size), bufs, n_docs_arr, first_doc, last_doc,
+            max_impact, idf, term_idx, uniq_terms.size, k, k1, b, avgdl, cache,
+        )
+        return docs, scores, rows.size
+
+    blocks = dict(zip(*np.unique(terms_arr, return_counts=True)))
+    return types.SimpleNamespace(
+        corpus=corpus, blocks=blocks, search=search, new_cache=_DecodeCache
+    )
+
+
+def _assert_segment_parity(seg, queries, k, n_blocks_ok):
+    cache = seg.new_cache()  # shared across queries, as in one shard task
+    for query_terms in queries:
+        docs, scores, n_blocks = seg.search(query_terms, k, cache)
+        assert n_blocks_ok(n_blocks), (query_terms, n_blocks)
+        expected = bm25_rank(seg.corpus, " ".join(query_terms), k=k, analyzer="simple")
+        assert list(docs) == [d for d, _ in expected], query_terms
+        np.testing.assert_allclose(scores, [s for _, s in expected], atol=1e-9)
+
+
+def test_maxscore_path_parity_multi_chunk(zipf_segment):
+    """Queries spanning more than CHUNK blocks take the MaxScore path (θ
+    re-tightening, block skips, term early-exit) and must still rank exactly
+    like the brute-force oracle."""
+    head = sorted(zipf_segment.blocks, key=zipf_segment.blocks.get)[-6:]
+    rest = sorted(set(zipf_segment.blocks) - set(head))
+    rng = np.random.default_rng(5)
+    queries = [
+        [str(rng.choice(head))] + list(rng.choice(rest, int(rng.integers(1, 4)), replace=False))
+        for _ in range(24)
+    ]
+    _assert_segment_parity(zipf_segment, queries, 10, lambda n: n > 16)
+
+
+def test_one_chunk_path_parity(zipf_segment):
+    """Queries with at most CHUNK blocks are scored exhaustively in one chunk:
+    same top-k as the oracle, for k below and above the match count."""
+    tail = sorted(t for t, n in zipf_segment.blocks.items() if n <= 8)
+    assert len(tail) >= 4
+    rng = np.random.default_rng(9)
+    queries = [
+        list(rng.choice(tail, int(rng.integers(1, 3)), replace=False)) for _ in range(20)
+    ]
+    for k in (3, 10, 1000):
+        _assert_segment_parity(zipf_segment, queries, k, lambda n: n <= 16)

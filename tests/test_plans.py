@@ -16,6 +16,7 @@ from rustserini_spark.operators.index_build import (
     load_index,
 )
 from rustserini_spark.operators.search import bm25_search
+from rustserini_spark.session import col_in
 
 
 def _plan(df) -> str:
@@ -33,6 +34,17 @@ def saved_index(spark, documents, tmp_path_factory):
 
 def test_term_filter_pushed_to_postings_scan(spark, saved_index):
     filtered = saved_index.postings.filter(F.col("term").isin(["spark", "queri"]))
+    plan = _plan(filtered)
+    assert "PushedFilters" in plan
+    m = re.search(r"PushedFilters: \[([^\]]*)\]", plan)
+    assert m and "term" in m.group(1), plan[:800]
+
+
+@pytest.mark.parametrize(
+    "terms", [["spark", "queri"], ["don't", "a\\b"], [f"t{i}" for i in range(50)]]
+)
+def test_col_in_term_filter_pushed_to_postings_scan(spark, saved_index, terms):
+    filtered = saved_index.postings.filter(col_in("term", terms))
     plan = _plan(filtered)
     assert "PushedFilters" in plan
     m = re.search(r"PushedFilters: \[([^\]]*)\]", plan)

@@ -123,3 +123,23 @@ def test_filter_unpushed_preserves_rows(spark):
     plain = sorted(r.id for r in df.filter(cond).collect())
     pinned = sorted(r.id for r in filter_unpushed(df, cond).collect())
     assert plain == pinned
+
+
+def test_filter_unpushed_stays_above_the_fan_out(spark):
+    """The pin's whole point: in the optimized plan the pinned filter stays
+    above the fan-out repartition, where a plain filter on the same computed
+    column is pushed below it (with the projection's expression substituted)
+    onto the undivided scan. An always-false term the optimizer can fold away
+    (``rand(0) < -1.0``) fails this."""
+    df = spark.range(100).repartition(4).select(F.col("id"), (F.col("id") % 7).alias("m"))
+    cond = F.col("m") >= 3
+
+    def filter_above_repartition(frame) -> bool:
+        ops = [
+            op for line in frame._jdf.queryExecution().optimizedPlan().toString().splitlines()
+            if (op := line.lstrip(" :+-").split(" ", 1)[0]) in ("Filter", "Repartition")
+        ]
+        return ops.index("Filter") < ops.index("Repartition")
+
+    assert not filter_above_repartition(df.filter(cond))
+    assert filter_above_repartition(filter_unpushed(df, cond))

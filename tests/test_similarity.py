@@ -5,6 +5,7 @@ import pytest
 from pyspark.sql import functions as F
 
 from rustserini_spark.operators.similarity import (
+    _prefilter_pairs,
     build_ivf_index,
     cosine_neardup_pairs,
     cosine_topk,
@@ -74,6 +75,44 @@ def test_neardup_pairs_symmetric_threshold(emb_np, spark, emb):
     expected = {(int(ids[i]), int(ids[j])) for i, j in zip(*iu) if cos[i, j] >= 0.5}
     got = {(r.vec_a, r.vec_b) for r in cosine_neardup_pairs(emb, threshold=0.5).collect()}
     assert got == expected
+
+
+@pytest.mark.parametrize("threshold", [0.5, 0.95])
+def test_neardup_pairs_unchanged_by_ordered_prefilter(emb_np, emb, threshold):
+    """Folding the vec_a < vec_b order into the raw-cosine prefilter changes
+    no output row: the result equals the unfolded pipeline (prefilter, r4,
+    then threshold and order), cos values included."""
+    ids, mat = emb_np
+    norm = mat / np.linalg.norm(mat, axis=1, keepdims=True)
+    raw = norm @ norm.T
+    ai, bj = np.nonzero(raw >= threshold - 1e-4)
+    cos = np.floor(raw[ai, bj] * 10000 + 0.5) / 10000
+    keep = (cos >= threshold) & (ids[ai] < ids[bj])
+    expected = {
+        (int(a), int(b)): c for a, b, c in zip(ids[ai[keep]], ids[bj[keep]], cos[keep])
+    }
+    got = {(r.vec_a, r.vec_b): r.cos for r in cosine_neardup_pairs(emb, threshold).collect()}
+    assert got.keys() == expected.keys()
+    for pair, c in expected.items():
+        assert got[pair] == pytest.approx(c, abs=1e-12), pair
+
+
+def test_prefilter_drops_self_and_reversed_pairs():
+    """On a dup-heavy block (20 vectors x 5 exact copies) the ordered
+    prefilter keeps one orientation of each near-dup pair and no
+    self-match: fewer than half the survivors of the unordered mask."""
+    rng = np.random.default_rng(3)
+    base = rng.normal(size=(20, 16))
+    mat = np.repeat(base, 5, axis=0)
+    ids = rng.permutation(100).astype(np.int64)
+    norm = mat / np.linalg.norm(mat, axis=1, keepdims=True)
+    raw = norm @ norm.T
+    pre = 0.95 - 1e-4
+    unordered = list(zip(*np.nonzero(raw >= pre)))
+    ordered = list(zip(*_prefilter_pairs(raw, pre, ids, ids)))
+    assert len(ordered) == 20 * 10  # C(5, 2) pairs per group
+    assert len(unordered) == 100 + 2 * len(ordered)
+    assert set(ordered) == {(i, j) for i, j in unordered if ids[i] < ids[j]}
 
 
 def test_lsh_ann_recall(spark, emb, emb_np):
