@@ -353,7 +353,7 @@ FROM documents d LEFT JOIN rebuilt r USING (doc_id)
 """
 
 
-# 64-bit simhash, exactly mirroring dedup._token_sign_vector: bit b of a token
+# 64-bit simhash, exactly mirroring the dedup._simhash64_batch kernel: bit b of a token
 # is bit (b%4) of hex digit (b//4) of md5(token); fingerprint bit b set when
 # the occurrence-weighted ±1 sum is positive; value is two's-complement BIGINT.
 _SIMHASH_SUMS = ", ".join(

@@ -34,7 +34,7 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, functions as F
 
 from rustserini_spark.functions.parity import r4
-from rustserini_spark.session import barrier, fan_out, filter_unpushed, scratch_dir
+from rustserini_spark.session import barrier, fan_out, filter_unpushed
 from rustserini_spark.functions.text import (
     _STOP_SORTED,
     _count_in,
@@ -495,9 +495,7 @@ def lm_perplexity_scores(
     same policy as the minhash signature table).
     """
     if lm is None:
-        path = lm_path or scratch_dir(docs.sparkSession, "unigram_lm")
-        unigram_lm(docs, text_col, id_col).write.mode("overwrite").parquet(path)
-        lm = docs.sparkSession.read.parquet(path)
+        lm = barrier(unigram_lm(docs, text_col, id_col), "unigram_lm", lm_path)
     stats = lm.agg(
         F.sum("cnt").cast("double").alias("_n"), F.count(F.lit(1)).cast("double").alias("_v")
     )

@@ -29,7 +29,7 @@ first-class additions a training-data pipeline over the same corpus needs.
 from __future__ import annotations
 
 import hashlib
-from collections import Counter
+from itertools import islice
 
 import numpy as np
 import pandas as pd
@@ -37,7 +37,7 @@ from pyspark.sql import DataFrame, functions as F
 
 from rustserini_spark.functions.parity import r4
 from rustserini_spark.functions.text import shingles_col, with_tokens
-from rustserini_spark.session import barrier, fan_out, filter_unpushed, scratch_dir
+from rustserini_spark.session import barrier, fan_out, filter_unpushed
 
 N_MINHASHES = 16
 N_BANDS = 8  # rows-per-band = 2
@@ -126,8 +126,9 @@ def minhash_signatures(
     if with_sets:
         cols.append(F.xxhash64("shingle").alias("_sh64"))
         extra.append(F.sort_array(F.collect_set("_sh64")).alias("_arr"))
+    # one F.expr per lane: a Column-API lane is ~9 py4j calls
     aggs = [
-        F.min((F.lit(MINHASH_A[i]) * F.col("_h") + F.lit(MINHASH_B[i])) % F.lit(MINHASH_P)).alias(f"h{i}")
+        F.expr(f"min(({MINHASH_A[i]} * _h + {MINHASH_B[i]}) % {MINHASH_P}) AS h{i}")
         for i in range(n_hashes)
     ]
     return shingled.select("doc_id", *cols).groupBy("doc_id").agg(*aggs, *extra)
@@ -194,8 +195,6 @@ def build_minhash_table(
     fixed-width table into a shingle-scale one); downstream consumers that
     only need the lanes are unaffected either way because parquet scans
     prune the column."""
-    spark = docs.sparkSession
-    path = path or scratch_dir(spark, "minhash_sig")
     # distinct=False: min over the shingle MULTISET equals min over the set
     # (min is idempotent under duplicates), so the 16-lane partial agg runs
     # map-side directly on the exploded relation and the only exchange is
@@ -203,8 +202,7 @@ def build_minhash_table(
     # every (doc_id, shingle-string) row (~40 bytes x shingle count) just to
     # dedup before an agg that never needed the dedup.
     shingled = doc_shingles(docs, text_col, id_col, distinct=False)
-    minhash_signatures(shingled, n_hashes, with_sets).write.mode("overwrite").parquet(path)
-    return spark.read.parquet(path)
+    return barrier(minhash_signatures(shingled, n_hashes, with_sets), "minhash_sig", path)
 
 
 def _band_explode(sig: DataFrame, n_hashes: int, n_bands: int) -> DataFrame:
@@ -219,35 +217,15 @@ def _band_explode(sig: DataFrame, n_hashes: int, n_bands: int) -> DataFrame:
     across a 16M-row band relation (~1e-4 birthday odds) at worst add one
     spurious LSH candidate, and identically on both engines (DuckDB replays
     the same truncated-md5 cast), so oracle parity is exact."""
+    # ONE SQL expression: one py4j call whatever n_bands * rows_per_band
     rows_per_band = n_hashes // n_bands
-    bands = [
-        F.struct(
-            F.lit(bi).alias("band_id"),
-            F.conv(
-                F.substring(
-                    F.md5(
-                        F.concat_ws(
-                            "|",
-                            *[
-                                F.col(f"h{bi * rows_per_band + j}").cast("string")
-                                for j in range(rows_per_band)
-                            ],
-                        )
-                    ),
-                    1,
-                    15,
-                ),
-                16,
-                10,
-            )
-            .cast("long")
-            .alias("band_hash"),
-        )
+    bands = ", ".join(
+        f"named_struct('band_id', {bi}, 'band_hash', CAST(conv(substring(md5(concat_ws('|', "
+        + ", ".join(f"CAST(h{bi * rows_per_band + j} AS STRING)" for j in range(rows_per_band))
+        + ")), 1, 15), 16, 10) AS BIGINT))"
         for bi in range(n_bands)
-    ]
-    return sig.select("doc_id", F.explode(F.array(*bands)).alias("band")).select(
-        "doc_id", F.col("band.band_id").alias("band_id"), F.col("band.band_hash").alias("band_hash")
     )
+    return sig.selectExpr("doc_id", f"inline(array({bands}))")
 
 
 def _banded_pairs(
@@ -291,7 +269,6 @@ def build_minhash_band_table(
     at 500k docs that base-side work dominated the probe once the
     universal-hash lanes made the snapshot side cheap). Pass ``is_sig=True``
     when ``docs_or_sig`` is already a signature table."""
-    spark = docs_or_sig.sparkSession
     sig = docs_or_sig if is_sig else minhash_signatures(
         doc_shingles(docs_or_sig, text_col, id_col, distinct=True), n_hashes
     )
@@ -301,8 +278,7 @@ def build_minhash_band_table(
         bands = bands.join(
             counts.filter(F.col("_n") <= max_bucket).drop("_n"), ["band_id", "band_hash"]
         )
-    bands.write.mode("overwrite").parquet(path)
-    return spark.read.parquet(path)
+    return barrier(bands, "minhash_bands", path)
 
 
 def minhash_probe_pairs(
@@ -955,58 +931,117 @@ def strip_duplicate_spans(
     )
 
 
-def _token_sign_vector(token: str) -> np.ndarray:
-    """64-element ±1 vector for one token: bit b = bit (b%4) of hex digit
-    (b//4) of md5(token) — ONE md5 per distinct token (the round-1 Catalyst
-    version spent 16 md5 calls per token per document), and a formulation
-    DuckDB can replay exactly (md5 + substr + strpos arithmetic)."""
-    h = hashlib.md5(token.encode("utf-8")).hexdigest()
-    digits = np.frombuffer(bytes.fromhex(h[:16]), dtype=np.uint8)
-    # frombuffer gives byte pairs; re-derive the 16 hex-digit values in string order
-    digits = np.stack([(digits >> 4) & 0xF, digits & 0xF], axis=1).reshape(-1)
-    b = np.arange(SIMHASH_BITS)
-    bits = (digits[b // 4].astype(np.int64) >> (b % 4)) & 1
-    return (2 * bits - 1).astype(np.int64)
+# SimHash bit b reads bit (b % 4) of hex digit (b // 4) of md5(token): the
+# high nibble of digest byte b // 8 when b // 4 is even, else the low nibble.
+# The same formulation DuckDB replays (md5 + substr + strpos arithmetic).
+_SIGN_BYTE = np.arange(SIMHASH_BITS) // 8
+_SIGN_SHIFT = (np.arange(SIMHASH_BITS) // 4 % 2 == 0) * 4 + np.arange(SIMHASH_BITS) % 4
+# token occurrences gathered per kernel step: bounds the (tokens x 64) sign
+# gather at 256 KiB whatever the Arrow batch size (batches reach 131,072
+# rows). 64k-token chunks ran no faster and left each Python worker's RSS
+# ~7 MB higher after a 250-doc batch.
+_SIMHASH_CHUNK_TOKENS = 1 << 12
 
 
-_POW2 = (1 << np.arange(SIMHASH_BITS, dtype=np.uint64))
+def _token_signs(tokens: list[str]) -> np.ndarray:
+    """(len(tokens), 64) int8 table of ±1 signs, one md5 per token."""
+    digests = b"".join(hashlib.md5(t.encode("utf-8")).digest()[:8] for t in tokens)
+    raw = np.frombuffer(digests, dtype=np.uint8).reshape(-1, 8)
+    bits = (raw[:, _SIGN_BYTE] >> _SIGN_SHIFT) & 1
+    return (2 * bits - 1).astype(np.int8)
+
+
+def _pack_positive(sums: np.ndarray) -> np.ndarray:
+    """(n, 64) per-bit sums -> n int64 fingerprints, bit b set when sum > 0."""
+    return np.packbits(sums > 0, axis=1, bitorder="little").view("<i8").reshape(-1)
+
+
+def _simhash64_batch(texts) -> np.ndarray:
+    """int64 SimHash of every text in one Arrow batch (see
+    ``simhash64_signatures``). Tokens get batch-local ids from one dict and
+    each distinct token is hashed once per batch; docs are summed in chunks
+    of at most ``_SIMHASH_CHUNK_TOKENS`` token occurrences (a longer doc
+    alone, in slices), so temporary memory does not grow with the batch."""
+    from rustserini_spark.analysis import simple_tokenize_text
+
+    out = np.zeros(len(texts), dtype=np.int64)
+    index: dict[str, int] = {}
+    table = np.empty((1024, SIMHASH_BITS), dtype=np.int8)
+    n_signed = 0
+    pending_rows: list[int] = []
+    pending_ids: list[int] = []
+    pending_lens: list[int] = []
+
+    def signs_for(ids: list[int]) -> np.ndarray:
+        nonlocal table, n_signed
+        if len(index) > n_signed:
+            fresh = list(islice(reversed(index), len(index) - n_signed))[::-1]
+            if len(index) > len(table):
+                grown = np.empty((max(len(index), 2 * len(table)), SIMHASH_BITS), np.int8)
+                grown[:n_signed] = table[:n_signed]
+                table = grown
+            table[n_signed : len(index)] = _token_signs(fresh)
+            n_signed = len(index)
+        return table[np.asarray(ids, dtype=np.int64)]
+
+    def flush() -> None:
+        if not pending_rows:
+            return
+        starts = np.cumsum([0] + pending_lens[:-1])
+        sums = np.add.reduceat(signs_for(pending_ids), starts, axis=0, dtype=np.int32)
+        out[pending_rows] = _pack_positive(sums)
+        pending_rows.clear()
+        pending_ids.clear()
+        pending_lens.clear()
+
+    setdefault = index.setdefault
+    for row, text in enumerate(texts):
+        ids = [setdefault(t, len(index)) for t in simple_tokenize_text(text)]
+        if not ids:
+            continue  # no tokens: every sum is 0, no bit set
+        if len(pending_ids) + len(ids) > _SIMHASH_CHUNK_TOKENS:
+            flush()
+        if len(ids) > _SIMHASH_CHUNK_TOKENS:
+            acc = np.zeros(SIMHASH_BITS, dtype=np.int64)
+            for s in range(0, len(ids), _SIMHASH_CHUNK_TOKENS):
+                acc += signs_for(ids[s : s + _SIMHASH_CHUNK_TOKENS]).sum(axis=0, dtype=np.int64)
+            out[row] = _pack_positive(acc[None, :])[0]
+            continue
+        pending_rows.append(row)
+        pending_ids.extend(ids)
+        pending_lens.append(len(ids))
+    flush()
+    return out
 
 
 def simhash64_signatures(
     docs: DataFrame, text_col: str = "text", id_col: str = "doc_id"
 ) -> DataFrame:
     """(doc_id, simhash): 64-bit simhash — bit b set when the
-    occurrence-weighted ±1 sum over tokens is positive. One Arrow pass, one
-    md5 per distinct token per batch. ``simhash`` is the two's-complement
-    int64 of the 64-bit pattern.
+    occurrence-weighted ±1 sum over tokens is positive. One Arrow pass through
+    the batch-vectorized ``_simhash64_batch`` kernel, one md5 per distinct
+    token per batch. ``simhash`` is the two's-complement int64 of the 64-bit
+    pattern.
+
+    Degenerate text: a null, empty, whitespace-only or punctuation-only doc
+    has no tokens, so every bit sum is 0 and its simhash is 0 — all such docs
+    share the fingerprint 0 and pair with each other at Hamming distance 0.
 
     ``id_col`` must be an integral column: the signature schema carries it as
     int64, and a silent cast of a string/UUID id would produce NULL doc_ids
     that downstream keeper joins drop or mis-keep without any error. Callers
     with string ids should assign a surrogate (e.g. the dense ordinal the
     index build already produces) and thread the original id alongside."""
-    from rustserini_spark.analysis import simple_tokenize_text
-
     require_integral_id(docs, id_col, "simhash64_signatures")
 
     def gen(batches):
         for pdf in batches:
             if pdf.empty:
                 continue
-            memo: dict[str, np.ndarray] = {}
-            ids = pdf.iloc[:, 0].to_numpy()
-            out_fp = np.empty(len(pdf), dtype=np.int64)
-            for i, text in enumerate(pdf.iloc[:, 1]):
-                acc = np.zeros(SIMHASH_BITS, dtype=np.int64)
-                for t, n in Counter(simple_tokenize_text(text)).items():
-                    v = memo.get(t)
-                    if v is None:
-                        v = _token_sign_vector(t)
-                        memo[t] = v
-                    acc += n * v
-                bits = (acc > 0).astype(np.uint64)
-                out_fp[i] = (bits * _POW2).sum().astype(np.uint64).view(np.int64)
-            yield pd.DataFrame({"doc_id": ids.astype(np.int64), "simhash": out_fp})
+            yield pd.DataFrame({
+                "doc_id": pdf.iloc[:, 0].to_numpy().astype(np.int64),
+                "simhash": _simhash64_batch(pdf.iloc[:, 1].tolist()),
+            })
 
     pairs = fan_out(docs.select(F.col(id_col).cast("long"), F.col(text_col)))
     return pairs.mapInPandas(gen, "doc_id long, simhash long")
@@ -1023,21 +1058,6 @@ def simhash_dedup_groups(docs: DataFrame, text_col: str = "text", id_col: str = 
     )
 
 
-def simhash_bands(simhash_col, n_bands: int) -> list:
-    """Disjoint bit-slice bands of the 64-bit fingerprint, as Catalyst
-    expressions (unsigned shifts — sign bit handled correctly)."""
-    width = SIMHASH_BITS // n_bands
-    # full-width band (n_bands=1, i.e. max_hamming=0): the all-ones mask does
-    # not fit a signed long literal and the AND would be identity anyway
-    if width == SIMHASH_BITS:
-        return [simhash_col.alias("band0")]
-    mask = (1 << width) - 1
-    return [
-        F.shiftrightunsigned(simhash_col, width * j).bitwiseAND(F.lit(mask)).alias(f"band{j}")
-        for j in range(n_bands)
-    ]
-
-
 def build_simhash_table(
     docs: DataFrame,
     path: str | None = None,
@@ -1050,10 +1070,7 @@ def build_simhash_table(
     instead of re-running the full-corpus Arrow signature pass per branch
     (2-3 corpus passes at 100 TB; round-5 verdict residual #4). ``path``
     defaults to a session scratch dir (session.scratch_dir)."""
-    spark = docs.sparkSession
-    path = path or scratch_dir(spark, "simhash_sig")
-    simhash64_signatures(docs, text_col, id_col).write.mode("overwrite").parquet(path)
-    return spark.read.parquet(path)
+    return barrier(simhash64_signatures(docs, text_col, id_col), "simhash_sig", path)
 
 
 def simhash_neardup_pairs(
@@ -1093,17 +1110,22 @@ def simhash_neardup_pairs(
         # nodes, zero reuse) — one corpus pass + a 16-byte-per-doc parquet
         # barrier is strictly cheaper at every scale.
         sig = build_simhash_table(docs, None, text_col, id_col)
-    sig = sig.select("doc_id", "simhash", *simhash_bands(F.col("simhash"), n_bands))
-    bands = sig.select(
-        "doc_id",
-        "simhash",
-        F.explode(
-            F.array(*[
-                F.struct(F.lit(j).alias("band_id"), F.col(f"band{j}").alias("band_val"))
-                for j in range(n_bands)
-            ])
-        ).alias("b"),
-    ).select("doc_id", "simhash", F.col("b.band_id").alias("band_id"), F.col("b.band_val").alias("band_val"))
+    # band values and their explode as ONE SQL expression: disjoint
+    # bit-slices of the fingerprint (unsigned shifts, so the sign bit is
+    # handled); a full-width band (n_bands=1, i.e. max_hamming=0) is the
+    # fingerprint itself — its all-ones mask would not fit a signed literal
+    width = SIMHASH_BITS // n_bands
+    mask = (1 << width) - 1
+
+    def band(col: str, j: int) -> str:
+        if width == SIMHASH_BITS:
+            return col
+        return f"(shiftrightunsigned({col}, {width * j}) & {mask})"
+
+    structs = ", ".join(
+        f"named_struct('band_id', {j}, 'band_val', {band('simhash', j)})" for j in range(n_bands)
+    )
+    bands = sig.selectExpr("doc_id", "simhash", f"inline(array({structs}))")
     if max_bucket is not None:
         counts = bands.groupBy("band_id", "band_val").agg(F.count(F.lit(1)).alias("_n"))
         bands = bands.join(
@@ -1130,7 +1152,6 @@ def simhash_neardup_pairs(
     # 4-column DISTINCT hash-aggregate (measured at sf1.0: that distinct WAS
     # the query — 118s wall, and the heap-OOM suspect in the driver's rep 2).
     cand = cand.filter(F.expr("bit_count(_xor)") <= max_hamming)
-    width = SIMHASH_BITS // n_bands
     if max_bucket is None and n_bands > 1:
         # Dedup multi-band matches WITHOUT a shuffle: emit a pair only from
         # its FIRST matching band. Band j matches iff bit-slice j of the xor
@@ -1138,19 +1159,8 @@ def simhash_neardup_pairs(
         # exactly one of the pair's join rows — the output is unique by
         # construction and the post-join plan is shuffle-free. (Only valid
         # when no bucket cap can drop an earlier matching band's bucket.)
-        mask = (1 << width) - 1
-        slice_is_zero = F.array(*[
-            (
-                F.shiftrightunsigned(F.col("_xor"), width * j).bitwiseAND(F.lit(mask))
-                if width < SIMHASH_BITS
-                else F.col("_xor")
-            )
-            == 0
-            for j in range(n_bands)
-        ])
-        cand = cand.filter(
-            F.col("band_id") == F.array_position(slice_is_zero, True) - 1
-        )
+        slice_is_zero = ", ".join(f"{band('_xor', j)} = 0" for j in range(n_bands))
+        cand = cand.filter(F.expr(f"band_id = array_position(array({slice_is_zero}), true) - 1"))
     else:
         cand = cand.select("doc_a", "doc_b", "_xor").distinct()
     return cand.select(

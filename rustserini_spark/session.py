@@ -33,15 +33,19 @@ def scratch_dir(spark: SparkSession, tag: str) -> str:
     return path
 
 
-def barrier(df: DataFrame, tag: str) -> DataFrame:
-    """Materialize once, read many: write ``df`` as parquet to a fresh
-    ``scratch_dir`` and return the read-back relation. Use it where a
-    relation feeds several consumers and Catalyst would otherwise re-derive
-    its subtree per consumer; the read-back plan is a plain columnar scan."""
+def barrier(df: DataFrame, tag: str, path: str | None = None) -> DataFrame:
+    """Materialize once, read many: write ``df`` as parquet to ``path`` (a
+    fresh ``scratch_dir`` when None) and return the read-back relation. Use
+    it where a relation feeds several consumers and Catalyst would otherwise
+    re-derive its subtree per consumer; the read-back plan is a plain
+    columnar scan. The read-back takes the schema just written instead of
+    inferring it from the footers, so it launches no Spark job (inference
+    runs a one-task job per read) and an empty ``df`` reads back with its
+    schema."""
     spark = df.sparkSession
-    path = scratch_dir(spark, tag)
+    path = path or scratch_dir(spark, tag)
     df.write.mode("overwrite").parquet(path)
-    return spark.read.parquet(path)
+    return spark.read.schema(df.schema).parquet(path)
 
 
 def local_rows_df(spark: SparkSession, rows, schema):
