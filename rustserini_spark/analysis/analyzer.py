@@ -35,6 +35,7 @@ from pyspark.sql.types import ArrayType, StringType
 
 from rustserini_spark.analysis.porter import porter_stem
 from rustserini_spark.analysis.stopwords import LUCENE_ENGLISH_STOPWORDS
+from rustserini_spark.session import _sql_ident
 
 # StandardTokenizer approximation: runs of Unicode letters/digits, keeping
 # internal apostrophes (UAX#29 Single_Quote/MidNumLet — Lucene indexes "don't"
@@ -112,10 +113,10 @@ def analyze_col(text: Column | str) -> Column:
     return analyze_udf(F.col(text) if isinstance(text, str) else text)
 
 
-def simple_tokens_col(text: Column | str) -> Column:
-    """SQL-parity tokenizer as a pure Catalyst expression (whole-stage codegen,
-    zero Python). DuckDB equivalent:
+def simple_tokens_col(text: str) -> Column:
+    """SQL-parity tokenizer over the column named ``text``, as a pure Catalyst
+    expression (whole-stage codegen, zero Python) built from SQL text in one
+    py4j call. DuckDB equivalent:
         list_filter(regexp_split_to_array(lower(text), '[^a-z0-9]+'), t -> t <> '')
     """
-    c = F.col(text) if isinstance(text, str) else text
-    return F.filter(F.split(F.lower(c), "[^a-z0-9]+"), lambda t: t != "")
+    return F.expr(f"filter(split(lower({_sql_ident(text)}), '[^a-z0-9]+'), t -> t != '')")

@@ -18,5 +18,7 @@ def r4(col: Column) -> Column:
 
 
 def sql_r4(expr: str) -> str:
-    """The DuckDB-side mirror of r4()."""
+    """r4() as SQL text: the DuckDB oracles' mirror, and the Spark SQL-text
+    column builders' r4 (Spark parses 0.5 as a decimal literal, casts it to
+    double and folds the cast, so the optimized expression is r4's)."""
     return f"floor(({expr}) * 10000 + 0.5) / 10000"

@@ -8,25 +8,28 @@ The reference has no curation surface (single-purpose IR engine,
 /root/reference/src/lib.rs); this is a first-class addition a 100 TB
 pretraining pipeline runs over the same corpus before indexing.
 
-100 TB plan shape (in stage order — filters first so every later stage sees
-a shrunk corpus):
+100 TB plan shape — ONE pass over the corpus, ONE barrier, two keeper
+windows over the barrier:
 
-1. language ID + quality features: pure Catalyst column expressions in ONE
-   projection over the scan — no shuffle, whole-stage codegen, filters
-   pushed as far down as the token materialization allows.
-2. exact dedup: keeper = min(id) per md5(text) via groupBy (map-side
-   combine: a viral page duplicated a million times collapses to one row
-   per map task) + a left-semi join back. Two shuffles of the FILTERED
-   corpus, no sort.
-3. near-dup dedup: 64-bit bag-of-words SimHash (one Arrow pass, one md5 per
-   distinct token per batch — similarity to dedup.simhash64_signatures),
-   keeper = min(id) per identical fingerprint, left-semi join. Permuting a
-   document's words does not change its fingerprint, so copy-paste
-   reorderings collapse; for Hamming-tolerant matching compose with
-   dedup.simhash_neardup_pairs instead.
+1. per-document pass: language ID + quality features as pure Catalyst
+   column expressions in ONE projection over the scan (no shuffle,
+   whole-stage codegen), the quality filter, then md5(text) and the 64-bit
+   bag-of-words SimHash (one Arrow pass through dedup.with_simhash, one md5
+   per distinct token per batch) appended to the surviving rows. The pass
+   writes ONE narrow barrier: ids, features and the two fixed-width keys,
+   no text.
+2. exact dedup: keep a row when id = min(id) OVER (PARTITION BY md5(text)).
+3. near-dup dedup: of those, keep a row when id = min(id) OVER (PARTITION
+   BY simhash). Permuting a document's words does not change its
+   fingerprint, so copy-paste reorderings collapse; for Hamming-tolerant
+   matching compose with dedup.simhash_neardup_pairs instead.
 
-Nothing is ever all-pairs; every aggregation key (md5, int64 fingerprint) is
-fixed-width regardless of document size.
+The two keepers are the oracle's two ``QUALIFY doc_id = min(doc_id) OVER
+(PARTITION BY ...)`` clauses, row for row: a window keeps every row whose id
+equals its partition's minimum, so an id held by several rows is judged in
+each row's own partition. Each window shuffles the survivor-sized barrier
+once, keyed on a fixed-width value regardless of document size (see
+``curate_corpus`` for the skew this trades); nothing is ever all-pairs.
 """
 
 from __future__ import annotations
@@ -34,7 +37,7 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, functions as F
 
 from rustserini_spark.functions.parity import r4
-from rustserini_spark.session import barrier, fan_out, filter_unpushed
+from rustserini_spark.session import _sql_ident, barrier, fan_out, filter_unpushed
 from rustserini_spark.functions.text import (
     _STOP_SORTED,
     _count_in,
@@ -42,7 +45,7 @@ from rustserini_spark.functions.text import (
     quality_features,
     with_tokens,
 )
-from rustserini_spark.operators.dedup import require_integral_id, simhash64_signatures
+from rustserini_spark.operators.dedup import require_integral_id, with_simhash
 
 QUALITY_COLS = (
     "n_chars",
@@ -67,11 +70,25 @@ def curate_corpus(
     (id, lang_pred, n_chars, n_tokens, avg_token_len, stopword_ratio,
     distinct_ratio). Keeper of every duplicate group is the smallest id.
 
+    Plan: one pass computes the features, filters, and appends md5(text)
+    and the SimHash; its rows land in ONE narrow barrier (no text column);
+    the exact and near-dup keepers are ``id = min(id) OVER (PARTITION BY
+    _text_hash)`` and ``... (PARTITION BY simhash)`` filters over the
+    barrier, the same shape as the oracle's two ``QUALIFY`` clauses, so a
+    duplicated id is kept wherever it is its partition's minimum.
+
+    Skew trade-off: a window has no map-side combine, so every copy of one
+    text (or of one SimHash value) shuffles into one task and is sorted
+    there — a page copied a million times sends a million narrow rows (no
+    text) to one task. Pre-aggregating ``min(id)`` per key in a groupBy
+    (map-side combined) and joining back on (key, id) keeps the same
+    per-row semantics; it is the change to make where such skew shows.
+
     The ratio thresholds compare the SAME r4-rounded values the
     ``text_quality`` oracle checks, so the survivor set is engine-exact."""
-    # fail BEFORE the lang/quality/exact stages burn a corpus pass: the
-    # SimHash stage at the end carries ids as int64 and a string id would
-    # silently become NULL there (see require_integral_id)
+    # fail BEFORE the pass burns a corpus scan: the SimHash stage carries
+    # ids as int64 and a string id would silently become NULL there (see
+    # require_integral_id)
     require_integral_id(docs, id_col, "curate_corpus")
     feat = with_tokens(fan_out(docs.select(id_col, text_col)), text_col).select(
         F.col(id_col),
@@ -90,30 +107,18 @@ def curate_corpus(
         & (F.col("stopword_ratio") <= max_stopword_ratio)
         & (F.col("distinct_ratio") >= min_distinct_ratio),
     )
-    # materialize the survivors ONCE: `kept` is consumed by THREE branches
-    # below (exact-keeper agg, exact semi-join, simhash stage), each of
-    # which would re-run the whole scan+filter subtree. One corpus pass +
-    # one survivor-sized parquet barrier replaces ~6 corpus passes —
-    # measured 8.5s -> ~3s at sf1.0 (and the unpushed filter takes the
-    # barrier-write job itself from ~5s to ~1s). Same build-once policy as
-    # the minhash signature table.
-    kept = barrier(kept, "curate_kept")
-
-    # exact dedup: keeper agg (map-side combined) + semi join on (hash, id)
-    kept = kept.withColumn("_text_hash", F.md5(F.col(text_col)))
-    exact_keepers = kept.groupBy("_text_hash").agg(F.min(id_col).alias(id_col))
-    kept = kept.join(exact_keepers, ["_text_hash", id_col], "left_semi")
-    # second barrier: the exact-dedup survivors feed three more consumers
-    # (the SimHash signature pass, the final keeper semi-join, the output
-    # projection) — without it each re-runs the md5 agg + semi-join chain
-    # (measured ~2x the remaining wall at sf1.0)
-    kept = barrier(kept, "curate_exact")
-
-    # near-dup dedup: identical-SimHash keeper over the exact-dedup survivors
-    sh = simhash64_signatures(kept, text_col, id_col)
-    sh_keepers = sh.groupBy("simhash").agg(F.min("doc_id").alias(id_col))
-    kept = kept.join(sh_keepers.select(id_col), [id_col], "left_semi")
-
+    # the whole per-document pass ends in ONE barrier of narrow rows: both
+    # keeper windows read fixed-width keys, so the text never crosses a
+    # shuffle, and the Arrow SimHash pass runs once per survivor.
+    kept = barrier(
+        with_simhash(kept.withColumn("_text_hash", F.md5(F.col(text_col))), text_col),
+        "curate_kept",
+    )
+    ident = _sql_ident(id_col)
+    for key in ("_text_hash", "simhash"):
+        kept = kept.withColumn(
+            "_keeper", F.expr(f"min({ident}) OVER (PARTITION BY {key})")
+        ).filter(F.expr(f"{ident} = _keeper"))
     return kept.select(id_col, "lang_pred", *QUALITY_COLS)
 
 
@@ -347,7 +352,7 @@ def source_stats(
         source_col,
         F.md5(F.col(text_col)).alias("_h"),
         F.size("toks").cast("long").alias("_nt"),
-        _count_in(F.col("toks"), _STOP_SORTED).cast("long").alias("_ns"),
+        _count_in("toks", _STOP_SORTED).cast("long").alias("_ns"),
     )
     agg = feat.groupBy(source_col).agg(
         F.count("*").alias("n_docs"),

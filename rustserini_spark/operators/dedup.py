@@ -32,7 +32,6 @@ import hashlib
 from itertools import islice
 
 import numpy as np
-import pandas as pd
 from pyspark.sql import DataFrame, functions as F
 
 from rustserini_spark.functions.parity import r4
@@ -1014,14 +1013,39 @@ def _simhash64_batch(texts) -> np.ndarray:
     return out
 
 
+def with_simhash(df: DataFrame, text_col: str = "text") -> DataFrame:
+    """``df`` with ``text_col`` replaced by ``simhash`` (int64, see
+    ``simhash64_signatures``), in ONE Arrow pass through the
+    ``_simhash64_batch`` kernel. Every other column passes through as the
+    same Arrow array Spark sent, untouched, so its type and nulls survive
+    exactly; only the text is read, and it is not sent back."""
+    import pyarrow as pa
+    from pyspark.sql.types import LongType, StructField, StructType
+
+    names = [f.name for f in df.schema.fields if f.name != text_col]
+    schema = StructType(
+        [df.schema[n] for n in names] + [StructField("simhash", LongType())]
+    )
+
+    def gen(batches):
+        for batch in batches:
+            sh = _simhash64_batch(batch.column(text_col).to_pylist())
+            yield pa.RecordBatch.from_arrays(
+                [batch.column(n) for n in names] + [pa.array(sh, pa.int64())],
+                names=names + ["simhash"],
+            )
+
+    return df.mapInArrow(gen, schema)
+
+
 def simhash64_signatures(
     docs: DataFrame, text_col: str = "text", id_col: str = "doc_id"
 ) -> DataFrame:
     """(doc_id, simhash): 64-bit simhash — bit b set when the
-    occurrence-weighted ±1 sum over tokens is positive. One Arrow pass through
-    the batch-vectorized ``_simhash64_batch`` kernel, one md5 per distinct
-    token per batch. ``simhash`` is the two's-complement int64 of the 64-bit
-    pattern.
+    occurrence-weighted ±1 sum over tokens is positive. One Arrow pass
+    (``with_simhash``) through the batch-vectorized ``_simhash64_batch``
+    kernel, one md5 per distinct token per batch. ``simhash`` is the
+    two's-complement int64 of the 64-bit pattern.
 
     Degenerate text: a null, empty, whitespace-only or punctuation-only doc
     has no tokens, so every bit sum is 0 and its simhash is 0 — all such docs
@@ -1033,18 +1057,8 @@ def simhash64_signatures(
     with string ids should assign a surrogate (e.g. the dense ordinal the
     index build already produces) and thread the original id alongside."""
     require_integral_id(docs, id_col, "simhash64_signatures")
-
-    def gen(batches):
-        for pdf in batches:
-            if pdf.empty:
-                continue
-            yield pd.DataFrame({
-                "doc_id": pdf.iloc[:, 0].to_numpy().astype(np.int64),
-                "simhash": _simhash64_batch(pdf.iloc[:, 1].tolist()),
-            })
-
-    pairs = fan_out(docs.select(F.col(id_col).cast("long"), F.col(text_col)))
-    return pairs.mapInPandas(gen, "doc_id long, simhash long")
+    pairs = docs.select(F.col(id_col).cast("long").alias("doc_id"), F.col(text_col))
+    return with_simhash(fan_out(pairs), text_col)
 
 
 def simhash_dedup_groups(docs: DataFrame, text_col: str = "text", id_col: str = "doc_id") -> DataFrame:

@@ -93,11 +93,60 @@ def fan_out(df, target: int | None = None):
     relation can possibly hold — by definition the input is small, or it
     would already have enough partitions.
     """
-    sc = df.sparkSession.sparkContext
-    target = target or sc.defaultParallelism
-    if df.rdd.getNumPartitions() < target:
+    target = target or df.sparkSession.sparkContext.defaultParallelism
+    n = _scan_partitions(df)
+    if n is not None and n < target:
         return df.repartition(target)
     return df
+
+
+def _scan_partitions(df) -> int | None:
+    """Partition count of the scan that feeds ``df``'s last stage, read from
+    its physical plan without running anything; None when that stage reads
+    an exchange sized by the session (or several inputs).
+
+    ``df.rdd.getNumPartitions()`` converts through ``javaToPython`` (~38 ms
+    a call) and, under AQE, runs an input's shuffle stages at plan time to
+    report the coalesced count. Instead the walk starts at AQE's input plan
+    (no exchanges inserted yet) and follows the child that passes its
+    partitioning up — through narrow operators and past a broadcast build
+    side — down to a leaf, whose RDD it builds: that lists files or slices
+    a range, it computes no data. A node that needs its child clustered or
+    ordered gets a shuffle, and the walk stops there."""
+    node = df._jdf.queryExecution().executedPlan()
+    if node.nodeName() == "AdaptiveSparkPlan":
+        node = node.inputPlan()
+    # a root limit, tail or top-k (CollectLimit, TakeOrderedAndProject)
+    # gathers its rows into one partition whatever its input's count
+    if node.outputPartitioning().numPartitions() == 1:
+        return 1
+    return _plan_partitions(node)
+
+
+def _plan_partitions(node) -> int | None:
+    if "Exchange" in node.nodeName():
+        return None
+    kids = node.children()
+    if kids.size() == 0:
+        return node.execute().getNumPartitions()
+    dists = node.requiredChildDistribution()
+    follow = []
+    for i in range(kids.size()):
+        dist = dists.apply(i)
+        name = dist.toString()
+        if name.startswith("BroadcastDistribution"):
+            continue
+        if name != "UnspecifiedDistribution":
+            # AllTuples (a global limit) asks for exactly one partition
+            n = dist.requiredNumPartitions()
+            return n.get() if n.isDefined() else None
+        follow.append(kids.apply(i))
+    if len(follow) == 1:
+        return _plan_partitions(follow[0])
+    if node.nodeName() == "Union":
+        counts = [_plan_partitions(k) for k in follow]
+        return None if None in counts else sum(counts)
+    return None
 
 
 def _sql_string(value: str) -> str:
@@ -106,6 +155,12 @@ def _sql_string(value: str) -> str:
     # before the parser sees the literal.
     esc = value.replace("\\", "\\\\").replace("'", "\\'").replace("$", "\\u0024")
     return f"'{esc}'"
+
+
+def _sql_ident(name: str) -> str:
+    """Backtick-quoted SQL identifier: the whole name is one column, even
+    one with spaces, dots or backticks."""
+    return "`" + name.replace("`", "``") + "`"
 
 
 def col_in(name: str, values) -> Column:
@@ -123,8 +178,7 @@ def col_in(name: str, values) -> Column:
     values = list(values)
     if not values:
         return F.lit(False)
-    quoted = name.replace("`", "``")
-    return F.expr(f"`{quoted}` IN ({', '.join(map(_sql_string, values))})")
+    return F.expr(f"{_sql_ident(name)} IN ({', '.join(map(_sql_string, values))})")
 
 
 def filter_unpushed(df, cond):
@@ -151,6 +205,22 @@ def filter_unpushed(df, cond):
     return df.filter(cond | (F.spark_partition_id() < F.lit(0)))
 
 
+def default_driver_memory(total_bytes: int | None = None) -> str:
+    """Default driver heap: half of physical memory, between 1g and 48g.
+
+    Local mode's driver JVM IS the executor fleet, so its heap must cover
+    every concurrent task's join/agg state: 16g left one bench rep dead on
+    java.lang.OutOfMemoryError at sf1.0 on 32 cores, and 48g is what a
+    128 GiB host gives (the executor memory a 32-core cluster node would
+    get). A fixed 48g would promise a 15 GiB host three times its memory;
+    the other half stays for the Python workers and the OS.
+    ``SPARK_GRAFT_DRIVER_MEM`` overrides it; cluster deployments set
+    executor memory instead."""
+    if total_bytes is None:
+        total_bytes = os.sysconf("SC_PAGE_SIZE") * os.sysconf("SC_PHYS_PAGES")
+    return f"{max(1, min(48, total_bytes // (2 << 30)))}g"
+
+
 def get_spark(
     app_name: str = "rustserini_spark",
     master: str | None = None,
@@ -174,13 +244,17 @@ def get_spark(
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
         .config("spark.sql.execution.arrow.maxRecordsPerBatch", "131072")
         .config("spark.sql.session.timeZone", "UTC")
-        # Local mode: the driver JVM IS the executor fleet, so its heap must
-        # cover every concurrent task's join/agg state. 16g left one driver
-        # bench rep dead on java.lang.OutOfMemoryError at sf1.0 (BENCH_r07
-        # sample 2); the host has 128 GiB, so size the heap like the
-        # executor memory a 32-core cluster node would get. Env-overridable
-        # for smaller hosts; cluster deployments set executor memory instead.
-        .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "48g"))
+        .config(
+            "spark.driver.memory",
+            os.environ.get("SPARK_GRAFT_DRIVER_MEM") or default_driver_memory(),
+        )
+        # PySpark 4.1 captures the Python call site on every Column method
+        # and F.col call (an active-session lookup, a conf read, a stack
+        # walk and two JVM thread-local writes each), which more than doubled
+        # the py4j round trips of building the curation feature projection.
+        # The only thing it buys is the Python call site in an
+        # AnalysisException's context; the message and the plan are kept.
+        .config("spark.python.sql.dataFrameDebugging.enabled", "false")
         .config("spark.ui.enabled", "false")
         .config("spark.sql.autoBroadcastJoinThreshold", str(64 * 1024 * 1024))
     )

@@ -32,8 +32,11 @@ def py4j_round_trips(spark, monkeypatch):
     """Counts py4j commands sent from this process to the JVM while the test
     runs (calls, proxy frees from the finalizer thread included); the
     gateway client's ``send_command`` is restored afterwards. The count is
-    the yielded object's ``n``."""
+    the yielded object's ``n``; ``of(build)`` is the settled count of one
+    ``build()`` call."""
+    import gc
     import threading
+    import time
     import types
 
     client = spark.sparkContext._gateway._gateway_client
@@ -46,5 +49,42 @@ def py4j_round_trips(spark, monkeypatch):
             state.n += 1
         return original(*args, **kwargs)
 
+    def settle() -> None:
+        # collect garbage and wait until py4j's finalizer thread has sent
+        # the resulting proxy frees; it drains its queue asynchronously, up
+        # to a second later, so undrained frees would land in the next count
+        gc.collect()
+        deadline = time.monotonic() + 10
+        while getattr(client, "finalizer_deque", None) and time.monotonic() < deadline:
+            time.sleep(0.01)
+
+    def of(build) -> int:
+        # settle before and after: frees of earlier garbage stay out, the
+        # build's own frees stay in
+        settle()
+        before = state.n
+        build()
+        settle()
+        return state.n - before
+
+    state.of = of
     monkeypatch.setattr(client, "send_command", counting)
     yield state
+
+
+@pytest.fixture
+def jobs_in_group(spark):
+    """``jobs_in_group(group, body)``: the number of Spark jobs ``body()``
+    launched, counted from the status tracker under a fresh job group."""
+
+    def count(group: str, body) -> int:
+        sc = spark.sparkContext
+        sc.setJobGroup(group, group)
+        try:
+            body()
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
+            sc.setLocalProperty("spark.job.description", None)
+        return len(sc.statusTracker().getJobIdsForGroup(group))
+
+    return count

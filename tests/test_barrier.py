@@ -86,33 +86,22 @@ def test_barriers_live_under_session_root_and_die_with_it(tmp_path):
     out = json.loads(lines[-1][len("RESULT "):])
     assert out["root"].startswith(str(local)), out["root"]
     tags = {name.rsplit("-", 1)[0] for name in out["barriers"]}
-    assert {"curate_kept", "curate_exact", "minhash_sig", "simhash_sig"} <= tags, out["barriers"]
+    assert {"curate_kept", "minhash_sig", "simhash_sig"} <= tags, out["barriers"]
     assert out["tmp_new"] == []
     assert out["root_after_stop"] is False
 
 
-def _jobs_in_group(spark, group: str, body) -> int:
-    sc = spark.sparkContext
-    sc.setJobGroup(group, group)
-    try:
-        body()
-    finally:
-        sc.setLocalProperty("spark.jobGroup.id", None)
-        sc.setLocalProperty("spark.job.description", None)
-    return len(sc.statusTracker().getJobIdsForGroup(group))
-
-
-def test_barrier_read_back_launches_no_job(spark, tmp_path):
+def test_barrier_read_back_launches_no_job(spark, tmp_path, jobs_in_group):
     """The barrier costs its write's jobs and nothing more: the read-back
     takes the written schema, so no footer-inference job runs."""
     from rustserini_spark.session import barrier
 
     df = spark.range(0, 1000, numPartitions=3).selectExpr("id", "CAST(id % 7 AS INT) AS k")
-    write_jobs = _jobs_in_group(
-        spark, "barrier-write", lambda: df.write.mode("overwrite").parquet(str(tmp_path / "w"))
+    write_jobs = jobs_in_group(
+        "barrier-write", lambda: df.write.mode("overwrite").parquet(str(tmp_path / "w"))
     )
     out = {}
-    barrier_jobs = _jobs_in_group(spark, "barrier-full", lambda: out.update(df=barrier(df, "jobs")))
+    barrier_jobs = jobs_in_group("barrier-full", lambda: out.update(df=barrier(df, "jobs")))
     assert write_jobs >= 1
     assert barrier_jobs == write_jobs
     assert out["df"].schema == spark.read.parquet(str(tmp_path / "w")).schema

@@ -289,8 +289,6 @@ def test_batch_build_round_trips_independent_of_term_count(tiny_index, py4j_roun
     """Building a lazy pruned-search batch costs a fixed number of py4j round
     trips: the term predicate is one ``col_in`` call, not one ``lit`` per
     distinct term (thousands of round trips for a 512-query batch)."""
-    import gc
-
     rng = np.random.default_rng(7)
     letters = np.array(list("bcdfghjklmnpqrstvwxz"))
 
@@ -298,11 +296,7 @@ def test_batch_build_round_trips_independent_of_term_count(tiny_index, py4j_roun
         return "".join(rng.choice(letters, 12))
 
     def round_trips(queries):
-        gc.collect()
-        before = py4j_round_trips.n
-        bm25_search_pruned(tiny_index, queries, k=10)
-        gc.collect()
-        return py4j_round_trips.n - before
+        return py4j_round_trips.of(lambda: bm25_search_pruned(tiny_index, queries, k=10))
 
     one = round_trips([("q0", f"manhattan {word()}")])
     batch = round_trips([(f"q{i}", f"{word()} {word()}") for i in range(512)])

@@ -3,15 +3,25 @@ known planted defects, keepers are the smallest ids, and the entry-contract
 result matches its DuckDB oracle value-exactly."""
 
 import duckdb
+import pandas as pd
 import pytest
 from pyspark.sql import functions as F
 
 from rustserini_spark.operators.curation import curate_corpus
+from rustserini_spark.operators.dedup import _simhash64_batch
 from rustserini_spark.session import local_rows_df
 
 GOOD = (
     "the quick brown fox jumps over the lazy dog while people work with good "
     "time and new ideas about life the world and other things we know"
+)
+OTHER = (
+    "people think that work and time with new friends can make life "
+    "good because we see the world change in many ways every day"
+)
+THIRD = (
+    "the small river runs past the old mill and the children walk along it "
+    "to school in the morning when the sun is low"
 )
 
 
@@ -26,8 +36,7 @@ def corpus(spark):
             "gegangen aber sie waren auch nicht auf der strasse oder im garten"),  # de
         (5, "spam spam spam spam spam spam spam spam spam spam spam spam "
             "spam spam spam spam"),                  # distinct_ratio too low
-        (6, "people think that work and time with new friends can make life "
-            "good because we see the world change in many ways every day"),  # survives
+        (6, OTHER),                                  # survives
     ]
     return local_rows_df(spark, rows, "doc_id long, text string")
 
@@ -300,3 +309,37 @@ def test_entry_webtext_curation_ops_match_duckdb_oracle(spark, sf_dir):
     assert all("this site uses cookies" not in t for t in boiler.values())
     n_kept = e.q_source_filter(spark, sf_dir).count()
     assert 0 < n_kept < n_docs
+
+
+def test_duplicated_id_keeps_per_row_window_semantics(spark):
+    """The keepers are the oracle's two QUALIFY clauses, row for row: a
+    row survives when its id is the minimum of its md5 partition and then
+    of its SimHash partition. Id 20 holds two texts: OTHER, where it is the
+    minimum, and a token-reversed GOOD (same SimHash as id 10's GOOD,
+    different md5), where it is not — only the first row stays (a keeper
+    semi-joined on the id alone kept both). Id 5 holds THIRD twice: both
+    rows are their partitions' minimum, so both stay."""
+    rows = [
+        (10, GOOD),
+        (20, OTHER),
+        (20, " ".join(reversed(GOOD.split()))),
+        (5, THIRD),
+        (5, THIRD),
+        (7, THIRD),
+    ]
+    docs = local_rows_df(spark, rows, "doc_id long, text string")
+    got = sorted((r.doc_id, r.n_chars) for r in curate_corpus(docs).collect())
+
+    table = pd.DataFrame(rows, columns=["doc_id", "text"])
+    table["simhash"] = _simhash64_batch(table["text"].tolist())
+    con = duckdb.connect()
+    con.register("t", table)
+    want = sorted(
+        (d, len(text))
+        for d, text in con.sql(
+            "SELECT doc_id, text FROM ("
+            "  SELECT * FROM t QUALIFY doc_id = min(doc_id) OVER (PARTITION BY md5(text))"
+            ") QUALIFY doc_id = min(doc_id) OVER (PARTITION BY simhash)"
+        ).fetchall()
+    )
+    assert got == want == sorted([(10, len(GOOD)), (20, len(OTHER)), (5, len(THIRD)), (5, len(THIRD))])

@@ -1,7 +1,5 @@
 """Dedup operator semantics on planted duplicates/near-duplicates."""
 
-import gc
-import time
 
 import pandas as pd
 import pytest
@@ -286,27 +284,6 @@ def test_minhash_lanes_identical_with_and_without_sets(documents):
     assert len(plain) > 100
 
 
-def _settle_proxy_frees(spark) -> None:
-    """Collect garbage and wait until py4j's finalizer thread has sent the
-    resulting proxy frees; it drains its queue asynchronously, up to a
-    second later, so undrained frees would land in the next count."""
-    client = spark.sparkContext._gateway._gateway_client
-    gc.collect()
-    deadline = time.monotonic() + 10
-    while getattr(client, "finalizer_deque", None) and time.monotonic() < deadline:
-        time.sleep(0.01)
-
-
-def _round_trips(spark, counter, build) -> int:
-    # settle before and after: frees of earlier garbage stay out, the
-    # build's own frees stay in
-    _settle_proxy_frees(spark)
-    before = counter.n
-    build()
-    _settle_proxy_frees(spark)
-    return counter.n - before
-
-
 def test_band_expressions_cost_constant_py4j_round_trips(spark, py4j_round_trips):
     """The minhash band explode and the SimHash band explode + first-band
     filter are one SQL expression each, so building them lazily costs the
@@ -315,8 +292,8 @@ def test_band_expressions_cost_constant_py4j_round_trips(spark, py4j_round_trips
 
     sig16 = spark.range(4).selectExpr("id AS doc_id", *[f"id AS h{i}" for i in range(16)])
     sig64 = spark.range(4).selectExpr("id AS doc_id", *[f"id AS h{i}" for i in range(64)])
-    mh_small = _round_trips(spark, py4j_round_trips, lambda: _banded_pairs(sig16, 16, 8, None))
-    mh_large = _round_trips(spark, py4j_round_trips, lambda: _banded_pairs(sig64, 64, 32, None))
+    mh_small = py4j_round_trips.of(lambda: _banded_pairs(sig16, 16, 8, None))
+    mh_large = py4j_round_trips.of(lambda: _banded_pairs(sig64, 64, 32, None))
     assert mh_large - mh_small <= 20, (mh_small, mh_large)
 
     sh_sig = spark.range(4).selectExpr("id AS doc_id", "id * 7919 AS simhash")
@@ -324,6 +301,7 @@ def test_band_expressions_cost_constant_py4j_round_trips(spark, py4j_round_trips
     def simhash_pairs(n_bands):
         return lambda: simhash_neardup_pairs(sh_sig, max_hamming=3, n_bands=n_bands, sig=sh_sig)
 
-    sh_small = _round_trips(spark, py4j_round_trips, simhash_pairs(4))
-    sh_large = _round_trips(spark, py4j_round_trips, simhash_pairs(32))
+    sh_small = py4j_round_trips.of(simhash_pairs(4))
+    sh_large = py4j_round_trips.of(simhash_pairs(32))
     assert sh_large - sh_small <= 20, (sh_small, sh_large)
+
