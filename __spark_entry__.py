@@ -732,10 +732,11 @@ def q_training_mix(spark, sf_dir):
     feat = docs.select("doc_id", lang_id_col("toks").alias("lang_pred"))
     # the sample filter references lang_pred twice (md5 salt concat + rate
     # lookup) and Catalyst's pushdown would substitute the FULL tokenize+lang
-    # CASE tree per reference — training_mix_sample now pins its predicate
-    # above the projection (session.filter_unpushed), so lang_pred is
-    # computed exactly once and the round-8 parquet barrier this entry
-    # carried is no longer needed (one job instead of two).
+    # CASE tree per reference (33 tokenizer copies in the optimized plan) —
+    # training_mix_sample pins its predicate directly above the projection
+    # (session.filter_unpushed's non-deterministic pin column), so the
+    # tokenizer appears once and lang_pred is computed once per row, with no
+    # parquet barrier (test_plans.py checks the count).
     return training_mix_sample(feat, MIX_RATES, salt=MIX_SALT).select(
         "doc_id", "lang_pred"
     )

@@ -98,8 +98,9 @@ def curate_corpus(
     )
     # filter_unpushed: the quality filter references four computed columns,
     # and Catalyst's pushdown would substitute the full tokenize+feature
-    # tree per reference below the projection — the pushed form re-tokenized
-    # every row ~5x (measured 5.1s vs 1.1s for this stage at 50k docs).
+    # tree per reference below the projection — the pushed form put the
+    # tokenizer 15 times in the optimized plan (test_plans.py pins it to
+    # once) and re-tokenized every row ~5x (5.1s vs 1.1s at 50k docs).
     kept = filter_unpushed(
         feat,
         F.col("lang_pred").isin(list(langs))
@@ -447,8 +448,9 @@ def training_mix_sample(
     # stratum and id), so it can never reach a scan's PushedFilters — but
     # when the stratum column is itself computed (lang_pred from the
     # tokenize tree), Catalyst's pushdown would substitute that whole tree
-    # per reference below the projection. Pinning the filter above the
-    # projection costs nothing and removes the duplication.
+    # per reference below the projection (33 tokenizer copies in the
+    # training_mix entry's plan). The pin keeps the filter directly above
+    # the projection, so the tree is computed once per row.
     return filter_unpushed(docs, u < F.coalesce(rate, F.lit(0.0)))
 
 

@@ -6,12 +6,15 @@ exact DuckDB oracle:
 
 * exact            — md5(text) groupBy; the 100 TB shape is a single shuffled
                      hash-agg with map-side combine, keeper = min(doc_id).
-* minhash + LSH    — shingle -> one md5-derived 28-bit base hash -> 16
-                     universal-hash lanes min((A[i]*h+B[i]) % P) (the
-                     datasketch / Spark-MinHashLSH multiply-mod-prime family,
-                     approximately min-wise independent) -> 8 bands of 2 ->
-                     band-bucket join produces candidate pairs. At scale only
-                     the band groupBy shuffles; no O(n^2) stage.
+* minhash + LSH    — one Arrow kernel per batch: shingle -> one md5-derived
+                     28-bit base hash -> 16 universal-hash lanes
+                     min((A[i]*h+B[i]) % P) (the datasketch /
+                     Spark-MinHashLSH multiply-mod-prime family,
+                     approximately min-wise independent), one signature row
+                     per input row (an incremental snapshot: the same
+                     lanes as JVM SQL) -> 8 bands of 2 -> band-bucket join
+                     produces candidate pairs. Only the band join shuffles;
+                     no O(n^2) stage.
 * n-gram Jaccard   — exact pairwise Jaccard over distinct 3-gram shingles via
                      shingle-inverted self-join (the verify stage behind LSH),
                      with an optional hot-shingle df cap for web scale.
@@ -88,49 +91,251 @@ def exact_dedup(docs: DataFrame, text_col: str = "text", id_col: str = "doc_id")
 
 
 def doc_shingles(
-    docs: DataFrame, text_col: str = "text", id_col: str = "doc_id", n: int = 3, distinct: bool = True
+    docs: DataFrame, text_col: str = "text", id_col: str = "doc_id", n: int = 3
 ) -> DataFrame:
-    """(doc_id, shingle) — the exploded shingle-inverted relation.
-
-    ``distinct=False`` skips a whole shuffle for consumers where multiset vs
-    set makes no difference (minhash: min over duplicates == min over set).
-    """
+    """(doc_id, shingle) — the exploded shingle-inverted relation, one row
+    per shingle occurrence."""
     # fan_out: tokenize+explode is the heavy pre-shuffle map pass of every
     # shingle consumer; a single-file input would otherwise run it 1-task
     # (no-op for many-partition inputs — see session.fan_out)
     toks = with_tokens(fan_out(docs.select(F.col(id_col), F.col(text_col))), text_col)
-    out = toks.select(
+    return toks.select(
         F.col(id_col).alias("doc_id"), F.explode(shingles_col("toks", n)).alias("shingle")
     )
-    return out.distinct() if distinct else out
+
+
+# items (tokens or shingles) reduced per kernel step, by both Arrow kernels:
+# bounds a chunk's memo and its gathered table — (items x 64) int8 SimHash
+# signs, 256 KiB; (items x 16) int64 minhash lanes, 512 KiB — whatever the
+# Arrow batch size (batches reach 131,072 rows). 64k-item chunks ran no
+# faster and left each Python worker's RSS ~7 MB higher after a 250-doc
+# batch. Shingles are nearly all distinct, so a memo spanning the whole
+# batch would grow with the batch.
+_KERNEL_CHUNK = 1 << 12
+_LANE_A = np.array(MINHASH_A, dtype=np.int64)
+_LANE_B = np.array(MINHASH_B, dtype=np.int64)
+
+
+def _chunked(seqs, reduce_chunk, combine):
+    """Per-row reductions in chunks of at most ``_KERNEL_CHUNK`` items, so a
+    kernel's temporary memory does not grow with the Arrow batch.
+
+    ``seqs`` yields ``(row, items)`` with at least one item.
+    ``reduce_chunk(items, lens)`` reduces the concatenated items of
+    consecutive rows (``lens`` items each) to one result per row. A row with
+    more items than a chunk is reduced alone, slice by slice, and
+    ``combine(parts)`` folds its slices' results into one. Yields
+    ``(rows, result)`` per chunk."""
+    limit = _KERNEL_CHUNK
+    rows: list[int] = []
+    items: list = []
+    lens: list[int] = []
+    for row, seq in seqs:
+        if rows and len(items) + len(seq) > limit:
+            yield rows, reduce_chunk(items, lens)
+            rows, items, lens = [], [], []
+        if len(seq) > limit:
+            slices = (seq[s : s + limit] for s in range(0, len(seq), limit))
+            yield [row], combine([reduce_chunk(part, [len(part)]) for part in slices])
+            continue
+        rows.append(row)
+        items.extend(seq)
+        lens.append(len(seq))
+    if rows:
+        yield rows, reduce_chunk(items, lens)
+
+
+def _map_text(df: DataFrame, text_col: str, fields: list, kernel) -> DataFrame:
+    """``df`` with ``text_col`` replaced by ``fields``, in ONE Arrow pass.
+    ``kernel(texts)`` maps one batch's texts to ``(rows, arrays)``: the
+    indices of the rows it keeps (None keeps every row) and one Arrow array
+    per field. Every other column passes through as the same Arrow array
+    Spark sent (taken at ``rows``), so its type and nulls survive exactly;
+    only the text is read, and it is not sent back."""
+    import pyarrow as pa
+    from pyspark.sql.types import StructType
+
+    names = [f.name for f in df.schema.fields if f.name != text_col]
+    out_names = names + [f.name for f in fields]
+
+    def gen(batches):
+        for batch in batches:
+            rows, arrays = kernel(batch.column(text_col).to_pylist())
+            cols = [batch.column(n) for n in names]
+            if rows is not None and len(rows) < batch.num_rows:
+                take = pa.array(rows, pa.int64())
+                cols = [c.take(take) for c in cols]
+            yield pa.RecordBatch.from_arrays(cols + arrays, names=out_names)
+
+    return df.mapInArrow(gen, StructType([df.schema[n] for n in names] + fields))
+
+
+def _shingles(toks: list[str]) -> list[str]:
+    """Space-joined 3-token shingles, as ``shingles_col(toks, 3)`` builds them."""
+    return list(map(" ".join, zip(toks, toks[1:], toks[2:])))
+
+
+def _chunk_minhash(shingles: list[str], lens: list[int], n_hashes: int, with_sets: bool):
+    """Lane minima of consecutive docs whose shingles are concatenated in
+    ``shingles`` (``lens`` per doc): a (len(lens), n_hashes) int64 array,
+    and with ``with_sets`` each doc's sorted distinct 64-bit shingle keys."""
+    index: dict[str, int] = {}
+    setdefault = index.setdefault
+    ids = np.fromiter(
+        (setdefault(s, len(index)) for s in shingles), dtype=np.int64, count=len(shingles)
+    )
+    digests = np.frombuffer(
+        b"".join(hashlib.md5(s.encode("utf-8")).digest() for s in index), dtype=np.uint8
+    ).reshape(-1, 16)
+    # h = int(md5[:7 hex]): the top 28 bits of the digest's first 4 bytes
+    h = (digests[:, :4].copy().view(">u4").reshape(-1) >> 4).astype(np.int64)
+    # exact in int64: h < 2^28 and A, B < 2^31, so A*h + B < 2^60
+    lanes = (h[:, None] * _LANE_A[:n_hashes] + _LANE_B[:n_hashes]) % MINHASH_P
+    starts = np.cumsum([0] + lens[:-1])
+    mins = np.minimum.reduceat(lanes[ids], starts, axis=0)
+    if not with_sets:
+        return mins, None
+    keys = digests[:, :8].copy().view(">i8").reshape(-1).astype(np.int64)[ids]
+    return mins, [np.unique(keys[s : s + n]) for s, n in zip(starts, lens)]
+
+
+def _minhash_batch(texts, n_hashes: int = N_MINHASHES, with_sets: bool = False):
+    """Minhash lanes of one Arrow batch of texts (see ``minhash_signatures``).
+
+    Returns ``(rows, lanes, sets)``: the indices of the texts that have at
+    least one shingle, their (len(rows), n_hashes) int64 lanes, and with
+    ``with_sets`` their sorted distinct shingle keys (else None). Docs are
+    reduced by ``_chunked``, each chunk with its own memo (one md5 per
+    distinct shingle in the chunk); a longer doc's slices fold by a running
+    minimum and a union of their keys."""
+    from rustserini_spark.analysis import simple_tokenize_text
+
+    def reduce_chunk(shingles, lens):
+        return _chunk_minhash(shingles, lens, n_hashes, with_sets)
+
+    def combine(parts):
+        mins = np.minimum.reduce([m for m, _ in parts])
+        if not with_sets:
+            return mins, None
+        return mins, [np.unique(np.concatenate([keys[0] for _, keys in parts]))]
+
+    # fewer than 3 tokens: no shingle, no signature row
+    seqs = (
+        (row, sh)
+        for row, text in enumerate(texts)
+        if (sh := _shingles(simple_tokenize_text(text)))
+    )
+    rows: list[int] = []
+    mins: list[np.ndarray] = []
+    sets: list[np.ndarray] = []
+    for chunk_rows, (m, keys) in _chunked(seqs, reduce_chunk, combine):
+        rows.extend(chunk_rows)
+        mins.append(m)
+        sets.extend(keys or ())
+    lanes = np.concatenate(mins) if mins else np.empty((0, n_hashes), dtype=np.int64)
+    return np.asarray(rows, dtype=np.int64), lanes, sets if with_sets else None
 
 
 def minhash_signatures(
-    shingled: DataFrame, n_hashes: int = N_MINHASHES, with_sets: bool = False
+    docs: DataFrame,
+    text_col: str = "text",
+    id_col: str = "doc_id",
+    n_hashes: int = N_MINHASHES,
+    with_sets: bool = False,
 ) -> DataFrame:
     """(doc_id, h0..h{n-1}) bigint lanes: minhash_i = min((A[i]*h + B[i]) % P)
-    over the per-shingle base hash h = int(md5(shingle)[:7 hex]).
+    over the doc's 3-token shingles (``simple_tokenize_text``, space-joined),
+    with the per-shingle base hash h = int(md5(shingle)[:7 hex]).
 
-    One md5 per distinct shingle; the lanes are integer multiply-mod —
-    computed identically by Spark and DuckDB (unlike xxhash64/murmur), so
-    the oracle replays every lane exactly. Long lanes also keep the 16-way
-    min agg in HashAggregate (string lanes forced SortAggregate: var-length
-    agg buffers can't hash-aggregate, and the sort was pure overhead).
+    One Arrow pass (``mapInArrow`` over ``fan_out(docs)``) through the
+    batch-vectorized ``_minhash_batch`` kernel: one md5 per distinct shingle
+    of a chunk, the lanes as int64 multiply-mod, ``np.minimum.reduceat``
+    over the docs. The lanes are plain integer arithmetic, so the DuckDB
+    oracle replays every one exactly. ``doc_id`` is ``id_col`` passed
+    through as the same Arrow array, so its type is kept exactly.
+    ``n_hashes`` is at most ``len(MINHASH_A)`` (16).
 
-    ``with_sets`` adds the doc's sorted 64-bit-hashed shingle set as ``_arr``
-    in the same aggregation (see ``build_minhash_table``).
+    The signature is per ROW, not per id: a duplicated id gets one signature
+    row per input row (the same per-row semantics as ``with_simhash`` and
+    ``curate_corpus``'s window keepers). A null, empty or whitespace-only
+    text, and any doc with fewer than 3 tokens, has no shingle and emits no
+    signature row, so it never becomes an LSH candidate.
+
+    ``with_sets`` adds ``_arr``: the doc's sorted, distinct shingle keys,
+    each the first 8 bytes of the shingle's md5 read as a big-endian int64
+    (see ``build_minhash_table``).
     """
-    h = F.conv(F.substring(F.md5(F.col("shingle")), 1, 7), 16, 10).cast("long")
-    cols, extra = [h.alias("_h")], []
+    import pyarrow as pa
+    from pyspark.sql.types import ArrayType, LongType, StructField
+
+    _check_n_hashes(n_hashes)
+    fields = [StructField(f"h{i}", LongType()) for i in range(n_hashes)]
     if with_sets:
-        cols.append(F.xxhash64("shingle").alias("_sh64"))
-        extra.append(F.sort_array(F.collect_set("_sh64")).alias("_arr"))
-    # one F.expr per lane: a Column-API lane is ~9 py4j calls
-    aggs = [
-        F.expr(f"min(({MINHASH_A[i]} * _h + {MINHASH_B[i]}) % {MINHASH_P}) AS h{i}")
+        fields.append(StructField("_arr", ArrayType(LongType(), False)))
+
+    def kernel(texts):
+        rows, lanes, sets = _minhash_batch(texts, n_hashes, with_sets)
+        arrays = [pa.array(lane) for lane in np.ascontiguousarray(lanes.T)]
+        if with_sets:
+            offsets = np.cumsum([0] + [len(s) for s in sets], dtype=np.int32)
+            values = np.concatenate(sets) if sets else np.empty(0, dtype=np.int64)
+            arrays.append(pa.ListArray.from_arrays(pa.array(offsets), pa.array(values)))
+        return rows, arrays
+
+    pairs = docs.select(F.col(id_col).alias("doc_id"), F.col(text_col))
+    return _map_text(fan_out(pairs), text_col, fields, kernel)
+
+
+def _check_n_hashes(n_hashes: int) -> None:
+    if not 0 < n_hashes <= len(MINHASH_A):
+        raise ValueError(
+            f"n_hashes must be in 1..{len(MINHASH_A)} (one lane per "
+            f"MINHASH_A/MINHASH_B constant), got {n_hashes}"
+        )
+
+
+def snapshot_minhash_signatures(
+    docs: DataFrame,
+    text_col: str = "text",
+    id_col: str = "doc_id",
+    n_hashes: int = N_MINHASHES,
+) -> DataFrame:
+    """The rows ``minhash_signatures`` emits (bit-identical lanes, one row
+    per input row, none for a doc without a shingle, ``doc_id``'s type
+    kept), computed by SQL expressions in the JVM: per row, the shingles'
+    base hashes in one ``transform`` and each lane as ``array_min`` of its
+    multiply-mod. No shuffle and no Python stage.
+
+    The incremental callers sign a SNAPSHOT with it: ``minhash_probe_pairs``'
+    new side, ``dedup_increment`` and the streaming ``dedup_batch``. A
+    snapshot is small next to the base corpus, and there a Python stage's
+    fixed cost (~0.1-0.2 s per pass on a 4-core host, whatever the input)
+    outweighs the kernel's per-shingle saving: on the sf0.1 entry snapshot
+    (715 docs; local[4], one session, five alternating rounds, medians)
+    ``dedup_increment`` ran 1.91 s with the kernel and 1.58 s with this
+    pass, ``minhash_probe_pairs`` 1.78 and 1.58 s. Corpus-sized passes
+    (``build_minhash_table``, the band table, the verify) keep the kernel,
+    whose per-shingle cost is far lower on long text."""
+    _check_n_hashes(n_hashes)
+    lanes = [
+        f"array_min(transform(_h, x -> ({MINHASH_A[i]} * x + {MINHASH_B[i]}) % {MINHASH_P}))"
+        f" AS h{i}"
         for i in range(n_hashes)
     ]
-    return shingled.select("doc_id", *cols).groupBy("doc_id").agg(*aggs, *extra)
+    toks = with_tokens(
+        fan_out(docs.select(F.col(id_col).alias("doc_id"), F.col(text_col))), text_col
+    )
+    # pinned above the tokenize projection: pushed below it, the predicate
+    # would tokenize every doc a second time
+    toks = filter_unpushed(toks, F.expr("size(toks) >= 3"))
+    return (
+        toks.select("doc_id", shingles_col("toks", 3).alias("_sh"))
+        .selectExpr(
+            "doc_id",
+            "transform(_sh, s -> CAST(conv(substring(md5(s), 1, 7), 16, 10) AS BIGINT)) AS _h",
+        )
+        .selectExpr("doc_id", *lanes)
+    )
 
 
 def minhash_lsh_pairs(
@@ -144,16 +349,16 @@ def minhash_lsh_pairs(
 ) -> DataFrame:
     """Candidate near-duplicate pairs (doc_a < doc_b) from banded minhash LSH.
 
-    Plan shape at scale: explode shingles (map) -> groupBy(doc) 16-way min agg
-    (one shuffle) -> explode bands (map) -> groupBy(band bucket) (one shuffle)
-    -> within-bucket pair expansion. Bucket sizes are bounded by collision
+    Plan shape at scale: one Arrow signature pass (map, see
+    ``minhash_signatures``) -> explode bands (map) -> band-bucket self-join
+    (one shuffle) -> within-bucket pair expansion. Bucket sizes are bounded by collision
     probability, not corpus size; for boilerplate-heavy web corpora pass
     ``max_bucket`` to drop buckets above the cap (pair expansion is quadratic
     per bucket; a bucket with millions of members is an exact-dup cluster
     better handled by exact_dedup upstream).
 
     ``sig``: a precomputed signature table (``build_minhash_table``). The
-    inline path recomputes the shingle+min-agg signature pass once per join
+    inline path would recompute the signature pass once per join
     branch of the band self-join (and once more for the bucket counts when
     ``max_bucket`` is set) — at 100 TB that is 2-3 full corpus passes, so the
     scale-safe form materializes signatures to parquet first (the index
@@ -164,9 +369,9 @@ def minhash_lsh_pairs(
     if sig is None:
         # Materialize the signature table even on the "inline" path: the band
         # self-join consumes it on BOTH sides and Catalyst re-derives the
-        # whole shingle+min-agg subtree per side (plan-verified: two full
-        # corpus subtrees, zero ReusedExchange) — one pass + a fixed-width
-        # parquet barrier is strictly cheaper at every scale.
+        # whole signature subtree per side (two full corpus passes, no
+        # reuse without an exchange) — one pass + a fixed-width parquet
+        # barrier is strictly cheaper at every scale.
         sig = build_minhash_table(docs, None, text_col, id_col, n_hashes)
     return _banded_pairs(sig, n_hashes, n_bands, max_bucket)
 
@@ -188,20 +393,16 @@ def build_minhash_table(
     durable path to reuse the table across sessions.
 
     ``with_sets``: additionally emit the doc's 64-bit-hashed shingle SET as a
-    sorted ``_arr`` column in the SAME aggregation — for an inline verify
+    sorted ``_arr`` column from the SAME kernel pass — for an inline verify
     that would otherwise pay a second tokenize pass over candidate docs.
     Leave False for durable tables at corpus scale (the array column turns a
     fixed-width table into a shingle-scale one); downstream consumers that
     only need the lanes are unaffected either way because parquet scans
-    prune the column."""
-    # distinct=False: min over the shingle MULTISET equals min over the set
-    # (min is idempotent under duplicates), so the 16-lane partial agg runs
-    # map-side directly on the exploded relation and the only exchange is
-    # doc-count-sized lane partials — the old distinct=True path shuffled
-    # every (doc_id, shingle-string) row (~40 bytes x shingle count) just to
-    # dedup before an agg that never needed the dedup.
-    shingled = doc_shingles(docs, text_col, id_col, distinct=False)
-    return barrier(minhash_signatures(shingled, n_hashes, with_sets), "minhash_sig", path)
+    prune the column. The kernel emits each doc's finished signature, so
+    the build is one map pass into the barrier write, with no shuffle."""
+    return barrier(
+        minhash_signatures(docs, text_col, id_col, n_hashes, with_sets), "minhash_sig", path
+    )
 
 
 def _band_explode(sig: DataFrame, n_hashes: int, n_bands: int) -> DataFrame:
@@ -268,9 +469,7 @@ def build_minhash_band_table(
     at 500k docs that base-side work dominated the probe once the
     universal-hash lanes made the snapshot side cheap). Pass ``is_sig=True``
     when ``docs_or_sig`` is already a signature table."""
-    sig = docs_or_sig if is_sig else minhash_signatures(
-        doc_shingles(docs_or_sig, text_col, id_col, distinct=True), n_hashes
-    )
+    sig = docs_or_sig if is_sig else minhash_signatures(docs_or_sig, text_col, id_col, n_hashes)
     bands = _band_explode(sig, n_hashes, n_bands)
     if max_bucket is not None:
         counts = bands.groupBy("band_id", "band_hash").agg(F.count(F.lit(1)).alias("_n"))
@@ -301,7 +500,8 @@ def minhash_probe_pairs(
     (doc_id, h0..h15) parquet table (built once by ``build_minhash_table``) —
     the same index-persisted-once / opened-many split the reference applies
     to its FAISS index (/root/reference/src/searcher/faiss/searcher.rs:41-64).
-    Only the new snapshot pays tokenize+shingle+min-agg; the join is a plain
+    Only the new snapshot pays a signature pass (``snapshot_minhash_signatures``,
+    JVM SQL, no Python stage); the join is a plain
     equi-join on (band_id, band_hash), and when the new snapshot is small
     relative to base (the common case) Spark broadcasts the new side.
 
@@ -324,6 +524,18 @@ def minhash_probe_pairs(
     pre-serialization) that is roughly 8 bands x ~35M snapshot docs; size
     driver memory accordingly or leave the pin off and take the shuffle.
     """
+    return _probe_matches(
+        new_docs, base_sig, text_col, id_col, n_hashes, n_bands, max_bucket,
+        new_sig, base_bands, broadcast_new,
+    ).distinct()
+
+
+def _probe_matches(
+    new_docs, base_sig, text_col, id_col, n_hashes, n_bands, max_bucket,
+    new_sig, base_bands, broadcast_new,
+) -> DataFrame:
+    """(new_id, base_id), one row per colliding band: ``minhash_probe_pairs``
+    before its distinct."""
     if base_bands is not None:
         # fail fast on a band table persisted under the pre-BIGINT key
         # format: joining a StringType band_hash against the LongType new
@@ -341,11 +553,7 @@ def minhash_probe_pairs(
                 "silently reports no collisions"
             )
     if new_sig is None:
-        # distinct=False: see build_minhash_table — the lane min-agg never
-        # needed the shingle dedup shuffle.
-        new_sig = minhash_signatures(
-            doc_shingles(new_docs, text_col, id_col, distinct=False), n_hashes
-        )
+        new_sig = snapshot_minhash_signatures(new_docs, text_col, id_col, n_hashes)
     new_bands = _band_explode(new_sig, n_hashes, n_bands)
     if base_bands is None:
         # signature-table path: band-hash + (optionally) cap the base side
@@ -381,7 +589,6 @@ def minhash_probe_pairs(
             & (F.col("n.band_hash") == F.col("b.band_hash")),
         )
         .select(F.col("n.doc_id").alias("new_id"), F.col("b.doc_id").alias("base_id"))
-        .distinct()
     )
 
 
@@ -404,13 +611,13 @@ def dedup_increment(
     an equi-join against the signature table (or, with ``base_bands``, the
     pre-capped band table — zero base-side compute per snapshot).
     ``broadcast_new`` as in ``minhash_probe_pairs``."""
-    new_sig = minhash_signatures(
-        doc_shingles(new_docs, text_col, id_col, distinct=False), n_hashes
-    )
-    hits = minhash_probe_pairs(
+    # the anti-join needs no distinct on its right side, so the probe's
+    # matches go in as they are: both distincts (pairs, then ids) and their
+    # shuffles are skipped
+    hits = _probe_matches(
         new_docs, base_sig, text_col, id_col, n_hashes, n_bands, max_bucket,
-        new_sig=new_sig, base_bands=base_bands, broadcast_new=broadcast_new,
-    ).select(F.col("new_id").alias(id_col)).distinct()
+        None, base_bands, broadcast_new,
+    ).select(F.col("new_id").alias(id_col))
     return new_docs.join(hits, id_col, "left_anti")
 
 
@@ -441,7 +648,7 @@ def ngram_jaccard_pairs(
     # analysis: jaccard over hashed sets equals jaccard over raw sets unless
     # two distinct shingles of one candidate pair collide in 64 bits,
     # ~1e-11 per doc).
-    occ = doc_shingles(docs, text_col, id_col, distinct=False).select(
+    occ = doc_shingles(docs, text_col, id_col).select(
         "doc_id", F.xxhash64("shingle").alias("shingle")
     )
     if max_shingle_df is None:
@@ -629,11 +836,11 @@ def minhash_verified_pairs(
     Plan shape at scale: banded candidate join (bounded buckets), candidates
     materialized once -> SEMI-JOIN REDUCTION AT THE DOCS LEVEL (candidate
     ids AQE-broadcast against the raw docs BEFORE tokenization, so the
-    verify tokenizes/shingles/dedups ONLY candidate docs — round 6
-    semi-joined the already-shingled corpus relation, which still paid the
-    full-corpus tokenize + distinct shuffle) -> SET-ARRAY verify: the
-    candidate-doc shingle sets aggregate to ONE array row per doc, the
-    array relation is attached to both pair sides (broadcast under AQE
+    verify tokenizes/shingles ONLY candidate docs — round 6 semi-joined
+    the already-shingled corpus relation, which still paid the full-corpus
+    tokenize + distinct shuffle) -> SET-ARRAY verify: the signature kernel
+    emits each candidate doc's shingle set as ONE array row, the array
+    relation is attached to both pair sides (broadcast under AQE
     while it fits, keyed join otherwise) and `array_intersect` computes
     |a n b| in codegen — the candidate-pair relation is never shuffled and
     per-pair cost is O(|a| + |b|). This replaced the round-7 pair-explode
@@ -653,7 +860,7 @@ def minhash_verified_pairs(
     Signatures are MATERIALIZED BY DEFAULT: the candidate stage consumes the
     signature relation in three branches (both sides of the band self-join +
     the bucket counts when ``max_bucket`` is set), so the inline form pays
-    2-3 full shingle+16-way-min-agg corpus passes — the build-once/probe-many
+    2-3 full signature corpus passes — the build-once/probe-many
     split (``build_minhash_table``) is the only scale-safe shape, and making
     the composed op default to the non-scale-safe variant was round-6 verdict
     #3. When ``sig`` is None the table is built ONCE to ``sig_path`` (a
@@ -661,11 +868,18 @@ def minhash_verified_pairs(
     explicit path at real scale so the artifact lands on durable storage and
     later calls reuse it) as an EAGER side effect at op-construction time,
     then every branch reads the fixed-width columnar table.
+
+    Signatures and shingle sets are per row (see ``minhash_signatures``): a
+    duplicated id contributes one set per input row, so a pair involving it
+    is verified once per row combination and comes back once per
+    combination that passes the threshold, each with its own jaccard. The
+    result is unique per (doc_a, doc_b) only when ids are unique; a caller
+    that needs one row per pair aggregates (e.g. max(jaccard) per pair).
     """
     inline_arrs = None
     if sig is None:
         # inline build: emit the hashed shingle-set array IN THE SAME
-        # aggregation as the 16 lanes (with_sets) — the verify then attaches
+        # kernel pass as the 16 lanes (with_sets) — the verify then attaches
         # arrays straight from the signature barrier and the second
         # (candidate-doc) tokenize pass + its separate barrier disappear.
         # Durable/caller-supplied tables stay fixed-width; that path keeps
@@ -701,18 +915,14 @@ def minhash_verified_pairs(
         docs_c = docs.select(F.col(id_col), F.col(text_col)).join(
             cand_docs, id_col, "left_semi"
         )
-    # verify-side shingles are hashed to 64-bit ints MAP-SIDE, before the
-    # set-dedup shuffle: every verify exchange (shingle distinct, the keyed
-    # join, the (pair, shingle) agg) then carries an 8-byte long instead of a
-    # raw 3-token string (~20-30 bytes on web text). The measured 4N penalty
-    # on this op is shuffle-byte-driven (+25% executor-core-seconds from
-    # cross-JVM remote fetches, BENCH/BASELINE.md), so narrowing the key
-    # attacks the non-scaling term directly. Jaccard over hashed sets equals
-    # jaccard over raw shingle sets unless two DISTINCT shingles of one
-    # candidate doc collide in 64 bits (P ~ s^2/2^65 per doc, ~1e-11 at
+    # verify-side shingle sets hold 64-bit keys (the first 8 bytes of each
+    # shingle's md5, from the same kernel pass as the lanes), so the arrays
+    # and the attach joins carry an 8-byte long per shingle instead of a raw
+    # 3-token string (~20-30 bytes on web text). Jaccard over hashed sets
+    # equals jaccard over raw shingle sets unless two DISTINCT shingles of
+    # one candidate doc collide in 64 bits (P ~ s^2/2^65 per doc, ~1e-11 at
     # s=10k shingles) — the op's error is still dominated by LSH candidate
-    # recall, and the sf0.01/200k outputs are verified identical to the
-    # string-keyed verify.
+    # recall.
     if threshold <= 0:
         raise ValueError(
             "minhash_verified_pairs requires threshold > 0: the verify only "
@@ -738,13 +948,13 @@ def minhash_verified_pairs(
     # EXPLODED shingle rows against wide arrays; aggregating to one array
     # row per doc first is what makes the attach joins broadcast-sized.)
     if inline_arrs is None:
-        sh = (
-            doc_shingles(docs_c, text_col, id_col, distinct=False)
-            .select("doc_id", F.xxhash64("shingle").alias("shingle"))
-            .distinct()
-        )
+        # one kernel pass over the candidate docs: the sorted distinct key
+        # set arrives per row, with no shingle explode and no set shuffle
         arrs = barrier(
-            sh.groupBy("doc_id").agg(F.collect_set("shingle").alias("_sh")), "minhash_varr"
+            minhash_signatures(docs_c, text_col, id_col, n_hashes, with_sets=True).select(
+                "doc_id", F.col("_arr").alias("_sh")
+            ),
+            "minhash_varr",
         )
     else:
         # inline path: the arrays already sit in the signature barrier
@@ -935,13 +1145,6 @@ def strip_duplicate_spans(
 # The same formulation DuckDB replays (md5 + substr + strpos arithmetic).
 _SIGN_BYTE = np.arange(SIMHASH_BITS) // 8
 _SIGN_SHIFT = (np.arange(SIMHASH_BITS) // 4 % 2 == 0) * 4 + np.arange(SIMHASH_BITS) % 4
-# token occurrences gathered per kernel step: bounds the (tokens x 64) sign
-# gather at 256 KiB whatever the Arrow batch size (batches reach 131,072
-# rows). 64k-token chunks ran no faster and left each Python worker's RSS
-# ~7 MB higher after a 250-doc batch.
-_SIMHASH_CHUNK_TOKENS = 1 << 12
-
-
 def _token_signs(tokens: list[str]) -> np.ndarray:
     """(len(tokens), 64) int8 table of ±1 signs, one md5 per token."""
     digests = b"".join(hashlib.md5(t.encode("utf-8")).digest()[:8] for t in tokens)
@@ -958,21 +1161,22 @@ def _pack_positive(sums: np.ndarray) -> np.ndarray:
 def _simhash64_batch(texts) -> np.ndarray:
     """int64 SimHash of every text in one Arrow batch (see
     ``simhash64_signatures``). Tokens get batch-local ids from one dict and
-    each distinct token is hashed once per batch; docs are summed in chunks
-    of at most ``_SIMHASH_CHUNK_TOKENS`` token occurrences (a longer doc
-    alone, in slices), so temporary memory does not grow with the batch."""
+    each distinct token is hashed once per batch; docs are summed by
+    ``_chunked`` (a longer doc alone, in slices), so temporary memory does
+    not grow with the batch."""
     from rustserini_spark.analysis import simple_tokenize_text
 
     out = np.zeros(len(texts), dtype=np.int64)
     index: dict[str, int] = {}
+    setdefault = index.setdefault
     table = np.empty((1024, SIMHASH_BITS), dtype=np.int8)
     n_signed = 0
-    pending_rows: list[int] = []
-    pending_ids: list[int] = []
-    pending_lens: list[int] = []
 
-    def signs_for(ids: list[int]) -> np.ndarray:
+    def reduce_chunk(tokens: list[str], lens: list[int]) -> np.ndarray:
         nonlocal table, n_signed
+        ids = np.fromiter(
+            (setdefault(t, len(index)) for t in tokens), dtype=np.int64, count=len(tokens)
+        )
         if len(index) > n_signed:
             fresh = list(islice(reversed(index), len(index) - n_signed))[::-1]
             if len(index) > len(table):
@@ -981,61 +1185,33 @@ def _simhash64_batch(texts) -> np.ndarray:
                 table = grown
             table[n_signed : len(index)] = _token_signs(fresh)
             n_signed = len(index)
-        return table[np.asarray(ids, dtype=np.int64)]
+        starts = np.cumsum([0] + lens[:-1])
+        return np.add.reduceat(table[ids], starts, axis=0, dtype=np.int32)
 
-    def flush() -> None:
-        if not pending_rows:
-            return
-        starts = np.cumsum([0] + pending_lens[:-1])
-        sums = np.add.reduceat(signs_for(pending_ids), starts, axis=0, dtype=np.int32)
-        out[pending_rows] = _pack_positive(sums)
-        pending_rows.clear()
-        pending_ids.clear()
-        pending_lens.clear()
-
-    setdefault = index.setdefault
-    for row, text in enumerate(texts):
-        ids = [setdefault(t, len(index)) for t in simple_tokenize_text(text)]
-        if not ids:
-            continue  # no tokens: every sum is 0, no bit set
-        if len(pending_ids) + len(ids) > _SIMHASH_CHUNK_TOKENS:
-            flush()
-        if len(ids) > _SIMHASH_CHUNK_TOKENS:
-            acc = np.zeros(SIMHASH_BITS, dtype=np.int64)
-            for s in range(0, len(ids), _SIMHASH_CHUNK_TOKENS):
-                acc += signs_for(ids[s : s + _SIMHASH_CHUNK_TOKENS]).sum(axis=0, dtype=np.int64)
-            out[row] = _pack_positive(acc[None, :])[0]
-            continue
-        pending_rows.append(row)
-        pending_ids.extend(ids)
-        pending_lens.append(len(ids))
-    flush()
+    # no tokens: every sum is 0, no bit set
+    seqs = (
+        (row, toks) for row, text in enumerate(texts) if (toks := simple_tokenize_text(text))
+    )
+    total = lambda parts: np.sum(parts, axis=0, dtype=np.int64)  # noqa: E731
+    for rows, sums in _chunked(seqs, reduce_chunk, total):
+        out[rows] = _pack_positive(sums)
     return out
 
 
 def with_simhash(df: DataFrame, text_col: str = "text") -> DataFrame:
     """``df`` with ``text_col`` replaced by ``simhash`` (int64, see
-    ``simhash64_signatures``), in ONE Arrow pass through the
-    ``_simhash64_batch`` kernel. Every other column passes through as the
-    same Arrow array Spark sent, untouched, so its type and nulls survive
-    exactly; only the text is read, and it is not sent back."""
+    ``simhash64_signatures``), in ONE Arrow pass (``_map_text``) through the
+    ``_simhash64_batch`` kernel; every other column passes through
+    untouched."""
     import pyarrow as pa
-    from pyspark.sql.types import LongType, StructField, StructType
+    from pyspark.sql.types import LongType, StructField
 
-    names = [f.name for f in df.schema.fields if f.name != text_col]
-    schema = StructType(
-        [df.schema[n] for n in names] + [StructField("simhash", LongType())]
+    return _map_text(
+        df,
+        text_col,
+        [StructField("simhash", LongType())],
+        lambda texts: (None, [pa.array(_simhash64_batch(texts), pa.int64())]),
     )
-
-    def gen(batches):
-        for batch in batches:
-            sh = _simhash64_batch(batch.column(text_col).to_pylist())
-            yield pa.RecordBatch.from_arrays(
-                [batch.column(n) for n in names] + [pa.array(sh, pa.int64())],
-                names=names + ["simhash"],
-            )
-
-    return df.mapInArrow(gen, schema)
 
 
 def simhash64_signatures(

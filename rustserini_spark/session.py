@@ -182,27 +182,41 @@ def col_in(name: str, values) -> Column:
 
 
 def filter_unpushed(df, cond):
-    """Filter WITHOUT letting Catalyst push the predicate below a repartition
-    or into a join condition.
+    """Filter WITHOUT letting Catalyst push the predicate below the
+    projection that computes its columns, below a repartition, or into a
+    join condition.
 
     When a filter references columns computed by an expensive projection
     (tokenize + feature trees here), Catalyst's pushdown substitutes the FULL
     defining expression per reference wherever the predicate lands: below
-    the fan-out repartition it runs on the undivided scan, inside a join
-    condition once per candidate pair (the optimization guide documents the
-    same pathology for UDFs, §4.4; it holds for large pure-expression trees
-    too, measured 5x on the curation feature pass at 50k docs). OR-ing the
-    predicate with an always-false non-deterministic term
-    (``spark_partition_id() < 0`` — a partition id is a non-negative int)
-    makes the predicate non-deterministic, which Catalyst never moves through
-    a repartition or into a join, while changing nothing about which rows
-    survive. ``rand(0) < -1.0`` would not do: the optimizer folds it to false
-    and the pin is gone. Use ONLY when every referenced column is computed —
-    a raw-column predicate would lose its parquet PushedFilters entry
-    (derived-column predicates never had one)."""
+    the projection every reference re-runs the tree, below the fan-out
+    repartition it runs on the undivided scan, inside a join condition once
+    per candidate pair (the optimization guide documents the same pathology
+    for UDFs, §4.4; it holds for large pure-expression trees too, measured
+    5x on the curation feature pass at 50k docs).
+
+    The pin: project a non-deterministic column (``spark_partition_id()``),
+    filter on ``cond OR <that column> < 0`` (a partition id is never
+    negative, so the row set is unchanged), then drop the column. Catalyst
+    never pushes a filter through a Project with a non-deterministic field,
+    so the predicate stays directly above the projection. A non-deterministic
+    term inside the predicate itself is not enough: Spark 4.1 still pushes
+    such a filter through a deterministic projection, substituting the
+    expressions (it only keeps it above a repartition and out of joins), and
+    ``rand(0) < -1.0`` is folded to false outright. Use ONLY when every
+    referenced column is computed — a raw-column predicate would lose its
+    parquet PushedFilters entry (derived-column predicates never had one)."""
     from pyspark.sql import functions as F
 
-    return df.filter(cond | (F.spark_partition_id() < F.lit(0)))
+    taken = {c.lower() for c in df.columns}
+    pin = "_unpushed_pin"
+    while pin in taken:
+        pin = "_" + pin
+    return (
+        df.withColumn(pin, F.spark_partition_id())
+        .filter(cond | (F.col(pin) < F.lit(0)))
+        .drop(pin)
+    )
 
 
 def default_driver_memory(total_bytes: int | None = None) -> str:

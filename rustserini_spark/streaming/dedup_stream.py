@@ -40,9 +40,8 @@ from rustserini_spark.operators.dedup import (
     N_BANDS,
     N_MINHASHES,
     _banded_pairs,
-    doc_shingles,
     minhash_probe_pairs,
-    minhash_signatures,
+    snapshot_minhash_signatures,
 )
 
 SEG_PREFIX = "seg_"
@@ -88,9 +87,7 @@ def dedup_batch(
     accumulated signature store -> write survivors (rows AND signatures),
     both keyed by batch_id for idempotent replay. Callable directly for
     backfill (the batch form of the stream)."""
-    batch_sig = minhash_signatures(
-        doc_shingles(batch_df, text_col, id_col, distinct=True), n_hashes
-    )
+    batch_sig = snapshot_minhash_signatures(batch_df, text_col, id_col, n_hashes)
     # materialize the batch signatures once: consumed by the within-batch
     # self-join (2 branches), the probe, and the survivor-signature write
     sig_stage = os.path.join(sig_dir, f"_stage_{batch_id:06d}")

@@ -40,9 +40,8 @@ def run_level(workers, cores):
     from rustserini_spark import get_spark
     from rustserini_spark.operators.dedup import (
         _band_explode,
-        doc_shingles,
         minhash_probe_pairs,
-        minhash_signatures,
+        snapshot_minhash_signatures,
     )
 
     tag = f"{workers}x{cores}"
@@ -81,13 +80,13 @@ def run_level(workers, cores):
     minhash_probe_pairs(snap.limit(20000), base_bands=bands, broadcast_new=True).count()
 
     # A: snapshot signature subtree alone (checksum forces all lanes)
-    sig_snap = minhash_signatures(doc_shingles(snap, distinct=True))
+    sig_snap = snapshot_minhash_signatures(snap)
     timed("snap_sig_only", lambda: tuple(
         sig_snap.agg(F.count(F.lit(1)), F.sum(F.crc32(F.col("h0").cast("string")))).first()))
 
     # B: snapshot band explode materialized to parquet (sig+band+write)
     timed("snap_bands_write", lambda: _band_explode(
-        minhash_signatures(doc_shingles(snap, distinct=True)), 16, 8
+        snapshot_minhash_signatures(snap), 16, 8
     ).write.mode("overwrite").parquet(SNAP_BANDS))
 
     # C: join-only — pre-materialized snapshot bands vs pre-capped base table

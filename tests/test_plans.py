@@ -195,3 +195,72 @@ def test_source_filter_aggregates_once_and_semijoins(spark, documents):
     assert "Python" not in plan, plan[:1200]
     assert "CartesianProduct" not in plan and "BroadcastNestedLoop" not in plan
     assert "LeftSemi" in plan, plan[:1500]
+
+
+def _optimized(df) -> str:
+    return df._jdf.queryExecution().optimizedPlan().toString()
+
+
+TOKENIZER = "split(lower("
+
+
+def test_pinned_filters_tokenize_once(spark, sf_dir, documents, monkeypatch):
+    """filter_unpushed keeps curate_corpus's quality filter and the training
+    mix sampler directly above the projection that tokenizes, so the
+    tokenizer appears once in each optimized plan. A predicate pushed below
+    that projection substitutes the tokenize tree per feature reference
+    (15 and 33 copies)."""
+    import __spark_entry__ as entry
+    from rustserini_spark.operators import curation
+
+    frames = {}
+
+    def capture(df, tag, path=None):
+        frames[tag] = df
+        return df
+
+    monkeypatch.setattr(curation, "barrier", capture)
+    curation.curate_corpus(documents)
+    assert _optimized(frames["curate_kept"]).count(TOKENIZER) == 1
+    assert _optimized(entry.q_training_mix(spark, sf_dir)).count(TOKENIZER) == 1
+
+
+def test_minhash_verified_pairs_intersects_once_per_pair(spark, documents):
+    """The jaccard threshold stays above the projection that computes the
+    intersection: one array_intersect per candidate pair, not one more per
+    reference inside the filter."""
+    from rustserini_spark.operators.dedup import minhash_verified_pairs
+
+    plan = _optimized(minhash_verified_pairs(documents))
+    assert plan.count("array_intersect(") == 1, plan[:3000]
+
+
+def _tokenize_passes(plan: str) -> int:
+    # a JVM tokenizer tree or an Arrow kernel each tokenize the text once
+    return plan.count(TOKENIZER) + plan.count("MapInArrow ")
+
+
+def test_minhash_family_tokenizes_once_without_shingle_aggregate(spark, documents, monkeypatch):
+    """Each minhash-family entry has one tokenize pass (the Arrow signature
+    kernel, or the snapshot side's SQL lanes) and no per-shingle md5 lane
+    aggregate."""
+    from rustserini_spark.operators import dedup
+
+    base = dedup.build_minhash_table(documents.select("doc_id", "text"))
+    new_docs = documents.select((F.col("doc_id") + 1_000_000).alias("doc_id"), "text")
+    frames = {}
+
+    def capture(df, tag, path=None):
+        frames[tag] = df
+        return df
+
+    monkeypatch.setattr(dedup, "barrier", capture)
+    dedup.minhash_lsh_pairs(documents)
+    plans = {
+        "minhash_lsh_pairs": _optimized(frames["minhash_sig"]),
+        "minhash_probe_pairs": _optimized(dedup.minhash_probe_pairs(new_docs, base)),
+        "dedup_increment": _optimized(dedup.dedup_increment(new_docs, base)),
+    }
+    for name, plan in plans.items():
+        assert _tokenize_passes(plan) == 1, (name, plan[:2000])
+        assert "md5(cast(shingle" not in plan, (name, plan[:2000])

@@ -83,8 +83,8 @@ def test_kernel_chunk_boundaries_match_per_doc_calls():
     """A batch over two chunks long, plus one doc longer than a chunk, gives
     each doc the fingerprint it gets alone in its batch."""
     docs = seeded_docs(11, 800)
-    docs.insert(300, " ".join(f"t{i % 997}" for i in range(dedup._SIMHASH_CHUNK_TOKENS + 5)))
-    assert sum(len(simple_tokenize_text(d)) for d in docs) > 2 * dedup._SIMHASH_CHUNK_TOKENS
+    docs.insert(300, " ".join(f"t{i % 997}" for i in range(dedup._KERNEL_CHUNK + 5)))
+    assert sum(len(simple_tokenize_text(d)) for d in docs) > 2 * dedup._KERNEL_CHUNK
     batch = _simhash64_batch(docs).tolist()
     alone = [int(_simhash64_batch([d])[0]) for d in docs]
     assert batch == alone
@@ -93,7 +93,7 @@ def test_kernel_chunk_boundaries_match_per_doc_calls():
 
 @pytest.mark.parametrize("chunk", [1, 3, 64])
 def test_kernel_tiny_chunks_match_reference(monkeypatch, chunk):
-    monkeypatch.setattr(dedup, "_SIMHASH_CHUNK_TOKENS", chunk)
+    monkeypatch.setattr(dedup, "_KERNEL_CHUNK", chunk)
     assert_parity(seeded_docs(3, 60) + ADVERSARIAL)
 
 
