@@ -103,7 +103,21 @@ EMB_QUERY_MAX_ID = 8  # embeddings with vec_id < 8 serve as the query set
 
 # --------------------------------------------------------- shared SQL bits --
 
-_TOKS = "list_filter(regexp_split_to_array(lower(text), '[^a-z0-9]+'), t -> t <> '')"
+
+
+def _lower(col: str) -> str:
+    """DuckDB ``lower`` that agrees with Spark's ``lower`` and Python's
+    ``str.lower``: DuckDB maps İ (U+0130) to a plain ``i``, they map it to
+    ``i`` + U+0307, which the tokenizers below treat as a separator."""
+    return f"lower(replace({col}, '\u0130', 'i\u0307'))"
+
+
+def _toks(col: str) -> str:
+    """The simple tokenizer (``simple_tokens_col``) over column ``col``."""
+    return f"list_filter(regexp_split_to_array({_lower(col)}, '[^a-z0-9]+'), t -> t <> '')"
+
+
+_TOKS = _toks("text")
 _DOCS_CTE = f"docs AS (SELECT doc_id, {_TOKS} AS toks FROM documents)"
 _TF_CTE = (
     "tf AS (SELECT doc_id, term, count(*) AS tf FROM "
@@ -143,7 +157,7 @@ stats AS (SELECT count(*) AS n_docs, avg(dl) AS avgdl FROM dl),
 dft AS (SELECT term, count(*) AS df FROM tf GROUP BY term),
 qraw(qid, query) AS (VALUES {_bm25_queries_values()}),
 qt AS (SELECT qid, term, count(*) AS qtf FROM
-        (SELECT qid, unnest(list_filter(regexp_split_to_array(lower(query), '[^a-z0-9]+'), t -> t <> '')) AS term
+        (SELECT qid, unnest({_toks('query')}) AS term
          FROM qraw) GROUP BY qid, term),
 scored AS (
   SELECT qt.qid, tf.doc_id,
@@ -474,7 +488,7 @@ DECON_BENCH_WINDOW = DECON_N + 4
 
 def _decontaminate_sql() -> str:
     n, w = DECON_N, DECON_BENCH_WINDOW
-    btoks = "list_filter(regexp_split_to_array(lower(btext), '[^a-z0-9]+'), t -> t <> '')"
+    btoks = _toks("btext")
     return f"""
 WITH {_DOCS_CTE},
 bench AS (SELECT array_to_string(toks[1:{w}], ' ') AS btext FROM docs WHERE doc_id < {DECON_BENCH_DOCS}),
@@ -1256,7 +1270,7 @@ def q_bm25_fields_topk_simple(spark, sf_dir):
 
 def _bm25_fields_sql(k1: float = 0.9, b: float = 0.4, k: int = BM25_K) -> str:
     def field_cte(col, tag):
-        toks = f"list_filter(regexp_split_to_array(lower({col}), '[^a-z0-9]+'), t -> t <> '')"
+        toks = _toks(col)
         return f"""
 d_{tag} AS (SELECT doc_id, {toks} AS toks FROM documents),
 dl_{tag} AS (SELECT doc_id, len(toks) AS dl FROM d_{tag}),
@@ -1278,7 +1292,7 @@ sc_{tag} AS (
     return f"""
 WITH qraw(qid, query) AS (VALUES {_bm25_queries_values()}),
 qt AS (SELECT qid, term, count(*) AS qtf FROM
-        (SELECT qid, unnest(list_filter(regexp_split_to_array(lower(query), '[^a-z0-9]+'), t -> t <> '')) AS term
+        (SELECT qid, unnest({_toks('query')}) AS term
          FROM qraw) GROUP BY qid, term),
 {field_cte('text', 't')},
 {field_cte('source', 's')},
@@ -1421,7 +1435,7 @@ WITH {_DOCS_CTE}
 SELECT d.doc_id,
   CAST(len(list_filter(regexp_split_to_array(d.text, '[{WS_CLASS}]+'), t -> t <> '')) AS BIGINT) AS n_ws_tokens,
   CAST(len(docs.toks) AS BIGINT) AS n_simple_tokens,
-  CAST(len(regexp_extract_all(lower(d.text), '{pat}')) AS BIGINT) AS n_bpe_ish_tokens
+  CAST(len(regexp_extract_all({_lower('d.text')}, '{pat}')) AS BIGINT) AS n_bpe_ish_tokens
 FROM documents d JOIN docs USING (doc_id)
 """
 

@@ -116,7 +116,9 @@ def analyze_col(text: Column | str) -> Column:
 def simple_tokens_col(text: str) -> Column:
     """SQL-parity tokenizer over the column named ``text``, as a pure Catalyst
     expression (whole-stage codegen, zero Python) built from SQL text in one
-    py4j call. DuckDB equivalent:
-        list_filter(regexp_split_to_array(lower(text), '[^a-z0-9]+'), t -> t <> '')
+    py4j call. DuckDB equivalent (DuckDB's ``lower`` maps İ to a plain i,
+    Spark's to i + U+0307, hence the replace):
+        list_filter(regexp_split_to_array(lower(replace(text, 'İ', 'i̇')),
+                    '[^a-z0-9]+'), t -> t <> '')
     """
     return F.expr(f"filter(split(lower({_sql_ident(text)}), '[^a-z0-9]+'), t -> t != '')")

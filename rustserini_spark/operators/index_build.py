@@ -131,11 +131,13 @@ class BM25Index:
     block_size: int = BLOCK_SIZE_DEFAULT
     n_shards: int = N_SHARDS_DEFAULT
     meta: dict = field(default_factory=dict)
-    # driver-side term -> idf map, preloaded once at materialize() when the
-    # vocabulary is small enough; None = look up per batch (memoized below).
-    # Killing the per-batch dictionary .collect() was round 3's measured
-    # ~2.5s fixed query-batch floor — a per-BATCH driver job that does not
-    # shrink with executors and so caps batch-scaling efficiency.
+    # driver-side term -> (idf, df) map, preloaded once at materialize() when
+    # the vocabulary is small enough; None = look up per batch (memoized
+    # below). Killing the per-batch dictionary .collect() was round 3's
+    # measured ~2.5s fixed query-batch floor — a per-BATCH driver job that
+    # does not shrink with executors and so caps batch-scaling efficiency.
+    # df rides along so the search can size a batch's matched postings
+    # (Σ df) without a job.
     idf_cache: dict | None = field(default=None, repr=False)
     _idf_memo: dict = field(default_factory=dict, repr=False)
 
@@ -148,9 +150,9 @@ class BM25Index:
         shuffle. Disk-opened indexes instead shuffle matched blocks once to
         their shard group per batch.
 
-        Also preloads the driver idf map (vocab permitting): a once-per-index
-        cost in the build amortized over every future query batch, replacing a
-        per-batch driver job."""
+        Also preloads the driver (idf, df) map (vocab permitting): a
+        once-per-index cost in the build amortized over every future query
+        batch, replacing a per-batch driver job."""
         import time as _time
 
         t0 = _time.perf_counter()
@@ -160,17 +162,17 @@ class BM25Index:
         self.dictionary = self.dictionary.persist()
         n_terms = self.dictionary.count()
         if self.idf_cache is None and n_terms <= MAX_IDF_CACHE_TERMS:
-            pdf = self.dictionary.select("term", "idf").toPandas()
-            self.idf_cache = dict(
-                zip(pdf["term"].tolist(), pdf["idf"].astype(float).tolist())
-            )
+            pdf = self.dictionary.select("term", "idf", "df").toPandas()
+            stats = zip(pdf["idf"].astype(float).tolist(), pdf["df"].astype(int).tolist())
+            self.idf_cache = dict(zip(pdf["term"].tolist(), stats))
         if timings is not None:
             timings["postings_count_sec"] = round(t1 - t0, 3)
             timings["dictionary_agg_sec"] = round(_time.perf_counter() - t1, 3)
         return self
 
-    def idf_for_terms(self, terms: list[str]) -> dict[str, float]:
-        """term -> idf for exactly the given terms (absent = OOV, omitted).
+    def idf_for_terms(self, terms: list[str]) -> dict[str, tuple[float, int]]:
+        """term -> (idf, df) for exactly the given terms (absent = OOV,
+        omitted).
 
         Preloaded map when the vocab fits (one lookup, zero Spark jobs per
         batch); otherwise one filtered collect for terms not yet memoized —
@@ -182,11 +184,11 @@ class BM25Index:
         if missing:
             rows = (
                 self.dictionary.filter(col_in("term", missing))
-                .select("term", "idf")
+                .select("term", "idf", "df")
                 .collect()
             )
             for r in rows:
-                self._idf_memo[r["term"]] = float(r["idf"])
+                self._idf_memo[r["term"]] = (float(r["idf"]), int(r["df"]))
             for t in missing:
                 self._idf_memo.setdefault(t, None)  # negative-cache OOV
         return {t: v for t in terms if (v := self._idf_memo.get(t)) is not None}

@@ -19,14 +19,28 @@ Two scoring strategies, both returning identical rankings:
   or head-term-dominated workloads: nothing ever materializes one query's full
   postings in a single task.
 
-* ``bm25_search_pruned`` (block-max pruned, per-query task): all of a query's
-  blocks group to one ``applyInPandas`` task which runs a lossless
-  MaxScore/block-max algorithm in NumPy — blocks whose upper bound cannot reach
-  the running top-k threshold are never decoded. Queries parallelize across
-  tasks (the reference's batch_search threads ⇔ Spark tasks,
-  /root/reference/src/searcher/lucene/searcher.rs:101-154). Preferred for
-  interactive k<<corpus retrieval; falls back to the exhaustive plan's answer
-  exactly (tested rank-identical).
+* ``bm25_search_pruned`` (block-max pruned): ``_score_blocks`` runs a lossless
+  MaxScore/block-max algorithm in NumPy over a doc-disjoint group of matched
+  blocks — blocks whose upper bound cannot reach the running top-k threshold
+  are never decoded. Which process runs it depends on the batch:
+
+  - a small batch (at most ``DRIVER_ROUTE_MAX_QUERY_TERMS`` analyzed
+    (qid, term) rows, and Σ df over its terms within
+    ``DECODE_CACHE_MAX_POSTINGS``) is scored on the DRIVER, like the
+    reference's one-process searcher: one JVM-only job fetches the matched
+    blocks (no Python worker, no exchange), ``_score_blocks`` runs once over
+    all of them, and the ranked result comes back as a local relation. The
+    fetch runs before the call returns;
+  - a larger batch runs ``_score_blocks`` per cached partition
+    (``mapInPandas``, doc-aligned indexes) or per shard group
+    (``applyInPandas``, disk-opened indexes), and a window merges the local
+    top-k lists. Queries parallelize across tasks (the reference's
+    batch_search threads ⇔ Spark tasks, its
+    src/searcher/lucene/searcher.rs:101-154);
+  - a batch above ``MAX_LOCAL_QUERY_TERMS`` falls back to ``bm25_search``.
+
+  Rankings are identical on every route; a score may differ between routes
+  in the last ulp, because the per-doc sums add in a different order.
 """
 
 from __future__ import annotations
@@ -53,9 +67,19 @@ from rustserini_spark.session import col_in, local_rows_df
 # exhaustive plan instead of silently shipping a huge closure to every task.
 MAX_LOCAL_QUERY_TERMS = 100_000
 
+# Batches with at most this many analyzed (qid, term) rows (about 64
+# queries) are scored on the driver when their matched postings also fit one
+# decode memo. Per-query NumPy work runs single-threaded there, so big
+# batches belong on the executors: on perfbench's 6,000-doc serve index in
+# 4 partitions (local[4], median call ms, driver vs distributed) 1 query
+# read 86 vs 251, 256 queries 151 vs 240, and 1,024 queries 395 vs 365. The
+# crossover falls as cores grow.
+DRIVER_ROUTE_MAX_QUERY_TERMS = 256
+
 # Per-shard-task decode memo budget (decoded postings retained), so a
 # head-term-heavy batch cannot hold an unbounded slice of the corpus decoded
-# in one task.
+# in one task. It also caps the matched postings (Σ df) of a batch scored on
+# the driver.
 DECODE_CACHE_MAX_POSTINGS = 4_000_000
 
 # Above this pickled size the per-batch query state (per-query term weights +
@@ -370,18 +394,89 @@ class _DecodeCache:
         self._n += hit[0].size
 
 
-def bm25_search_pruned(index: BM25Index, queries, k: int = 10) -> DataFrame:
-    """Document-sharded block-max search (the distributed-IR standard).
+def _score_blocks(
+    pdf: pd.DataFrame,
+    per_query: dict[str, dict[str, float]],
+    idf_by_term: dict[str, float],
+    k: int,
+    k1: float,
+    b: float,
+    avgdl: float,
+) -> pd.DataFrame:
+    """Exact top-k (qid, doc_id, score) per query over one DOC-DISJOINT group
+    of matched blocks: every doc in ``pdf`` has all its matched postings in
+    ``pdf``, so its local top-k holds every doc of the group's global top-k.
+    Each query's rows come out in rank order. ``per_query`` maps qid ->
+    {term: qtf}."""
+    if pdf.empty:
+        return pd.DataFrame(columns=["qid", "doc_id", "score"])
+    terms_arr = pdf["term"].to_numpy()
+    uniq_terms, term_idx = np.unique(terms_arr, return_inverse=True)
+    # each term's rows, ascending: one stable sort of the term index
+    by_term = np.argsort(term_idx, kind="stable")
+    bounds = np.searchsorted(term_idx[by_term], np.arange(uniq_terms.size + 1))
+    rows_of = {t: by_term[bounds[i] : bounds[i + 1]] for i, t in enumerate(uniq_terms)}
+    n_docs_arr = pdf["n_docs"].to_numpy(dtype=np.int64)
+    first_doc = pdf["first_doc"].to_numpy(dtype=np.int64)
+    last_doc = pdf["last_doc"].to_numpy(dtype=np.int64)
+    idf = np.array([idf_by_term.get(t, 0.0) for t in terms_arr])
+    max_impact = block_upper_bound(
+        pdf["max_tf"].to_numpy(), pdf["min_dl"].to_numpy(), idf, k1, b, avgdl
+    )
+    bufs = list(pdf["postings_bin"])
+    decoded_cache = _DecodeCache()
 
-    Matched posting blocks shuffle ONCE to their doc-shard group — never per
-    query — because shards hold disjoint doc sets: every doc is fully scored
-    inside its shard, each shard emits an exact local top-k per query, and a
-    doc in the global top-k is necessarily in its shard's local top-k. The
-    global merge is a window over shards x queries x k rows (tiny). Query
-    terms/idf travel in the task closure (driver-analyzed, small — huge query
-    batches fall back to the fully distributed exhaustive plan), so the plan
-    has no join fan-out at all: one shuffle + one window. Task parallelism =
-    the index's build-time ``n_shards``.
+    out_qid, out_doc, out_score = [], [], []
+    for qid, tw in per_query.items():
+        present = [t for t in tw if t in rows_of]
+        if not present:
+            continue
+        rows = np.concatenate([rows_of[t] for t in present])
+        qtf_row = np.concatenate([np.full(rows_of[t].size, tw[t]) for t in present])
+        docs, scores = _shard_topk(
+            rows, qtf_row, bufs, n_docs_arr, first_doc, last_doc, max_impact,
+            idf, term_idx, uniq_terms.size, k, k1, b, avgdl, decoded_cache,
+        )
+        out_qid.extend([qid] * docs.size)
+        out_doc.append(docs)
+        out_score.append(scores)
+    if not out_qid:
+        return pd.DataFrame(columns=["qid", "doc_id", "score"])
+    return pd.DataFrame(
+        {
+            "qid": out_qid,
+            "doc_id": np.concatenate(out_doc),
+            "score": np.concatenate(out_score),
+        }
+    )
+
+
+def bm25_search_pruned(index: BM25Index, queries, k: int = 10) -> DataFrame:
+    """Block-max pruned top-k. ``queries``: DataFrame or list of (qid, query)
+    pairs. Rankings are the same on every route; a score may differ between
+    routes in the last ulp (the per-doc sums add in a different order).
+
+    Driver route: a batch with at most ``DRIVER_ROUTE_MAX_QUERY_TERMS``
+    analyzed (qid, term) rows whose terms' Σ df is within
+    ``DECODE_CACHE_MAX_POSTINGS``. The matched blocks of its in-vocabulary
+    terms are fetched in one JVM-only job and scored in this process. That
+    is exact on any index — doc-aligned, disk-opened, or an uncompacted
+    union of segments — because the union of all blocks holds every doc's
+    complete postings. The job runs before this function returns; the result
+    is a local relation, so collecting it runs none. A batch with no
+    in-vocabulary term runs no job at all.
+
+    Distributed routes (larger batches; above ``MAX_LOCAL_QUERY_TERMS`` the
+    exhaustive ``bm25_search`` instead) — document-sharded, the
+    distributed-IR standard. Doc-aligned indexes score each cached partition
+    in place (zero block shuffle); other indexes shuffle matched blocks ONCE
+    to their doc-shard group — never per query. Shards hold disjoint doc
+    sets, so every doc is fully scored inside its shard, each shard emits an
+    exact local top-k per query, and a doc in the global top-k is
+    necessarily in its shard's local top-k. The global merge is a window over
+    shards x queries x k rows (tiny). Query terms/idf travel in the task
+    closure (driver-analyzed, small — huge query batches fall back to the
+    fully distributed exhaustive plan), so the plan has no join fan-out.
 
     Block score bounds are computed HERE from the idf-free (max_tf, min_dl)
     block metadata with the index's current global idf/avgdl — so pruning is
@@ -399,8 +494,24 @@ def bm25_search_pruned(index: BM25Index, queries, k: int = 10) -> DataFrame:
         per_query.setdefault(qid, {})[term] = float(qtf)
     # cached on the index (one-time at materialize, or memoized lookups):
     # no per-batch driver job — round 3's ~2.5s fixed per-batch floor
-    idf_by_term = index.idf_for_terms(terms)
+    stats = index.idf_for_terms(terms)
+    idf_by_term = {t: idf for t, (idf, _df) in stats.items()}
     k1, b, avgdl = index.k1, index.b, (index.avgdl or 1.0)
+
+    if (
+        len(qt_rows) <= DRIVER_ROUTE_MAX_QUERY_TERMS
+        and sum(df for _idf, df in stats.values()) <= DECODE_CACHE_MAX_POSTINGS
+    ):
+        if not idf_by_term:
+            return _empty_result(spark)
+        blocks = (
+            index.postings.filter(col_in("term", sorted(idf_by_term)))
+            .select("term", "n_docs", "first_doc", "last_doc", "max_tf", "min_dl", "postings_bin")
+            .toPandas()
+        )
+        top = _score_blocks(blocks, per_query, idf_by_term, k, k1, b, avgdl)
+        top["rank"] = top.groupby("qid", sort=False).cumcount() + 1
+        return local_rows_df(spark, top, RESULT_SCHEMA)
 
     # large query batches: ship query state once per executor (broadcast),
     # not once per task binary
@@ -422,54 +533,9 @@ def bm25_search_pruned(index: BM25Index, queries, k: int = 10) -> DataFrame:
     else:
         _qstate_bv = None
 
-    def _query_state():
-        return _qstate_bv.value if _qstate_bv is not None else _qstate
-
     def shard_search(pdf: pd.DataFrame) -> pd.DataFrame:
-        if pdf.empty:
-            return pd.DataFrame(columns=["qid", "doc_id", "score"])
-        per_query, idf_by_term = _query_state()
-        terms_arr = pdf["term"].to_numpy()
-        uniq_terms, term_idx = np.unique(terms_arr, return_inverse=True)
-        # each term's rows, ascending: one stable sort of the term index
-        by_term = np.argsort(term_idx, kind="stable")
-        bounds = np.searchsorted(term_idx[by_term], np.arange(uniq_terms.size + 1))
-        rows_of = {t: by_term[bounds[i] : bounds[i + 1]] for i, t in enumerate(uniq_terms)}
-        n_docs_arr = pdf["n_docs"].to_numpy(dtype=np.int64)
-        first_doc = pdf["first_doc"].to_numpy(dtype=np.int64)
-        last_doc = pdf["last_doc"].to_numpy(dtype=np.int64)
-        idf = np.array([idf_by_term.get(t, 0.0) for t in terms_arr])
-        max_impact = block_upper_bound(
-            pdf["max_tf"].to_numpy(), pdf["min_dl"].to_numpy(), idf, k1, b, avgdl
-        )
-        bufs = list(pdf["postings_bin"])
-        decoded_cache = _DecodeCache()
-
-        out_qid, out_doc, out_score = [], [], []
-        for qid, tw in per_query.items():
-            present = [t for t in tw if t in rows_of]
-            if not present:
-                continue
-            rows = np.concatenate([rows_of[t] for t in present])
-            qtf_row = np.concatenate(
-                [np.full(rows_of[t].size, tw[t]) for t in present]
-            )
-            docs, scores = _shard_topk(
-                rows, qtf_row, bufs, n_docs_arr, first_doc, last_doc, max_impact,
-                idf, term_idx, uniq_terms.size, k, k1, b, avgdl, decoded_cache,
-            )
-            out_qid.extend([qid] * docs.size)
-            out_doc.append(docs)
-            out_score.append(scores)
-        if not out_qid:
-            return pd.DataFrame(columns=["qid", "doc_id", "score"])
-        return pd.DataFrame(
-            {
-                "qid": out_qid,
-                "doc_id": np.concatenate(out_doc),
-                "score": np.concatenate(out_score),
-            }
-        )
+        per_query, idf_by_term = _qstate_bv.value if _qstate_bv is not None else _qstate
+        return _score_blocks(pdf, per_query, idf_by_term, k, k1, b, avgdl)
 
     blocks = index.postings.filter(col_in("term", terms))
     out_schema = "qid string, doc_id long, score double"

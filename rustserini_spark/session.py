@@ -58,18 +58,27 @@ def local_rows_df(spark: SparkSession, rows, schema):
     relation (query-term frames, ANN probe sets, empty results) must come
     through here — at batch rates that fixed cost IS the scaling floor.
 
+    ``rows`` is an iterable of tuples or a pandas DataFrame in schema order.
     ``schema`` is either a DDL string ("a string, b long") or a StructType.
+
+    The result is a ``LocalRelation``, so collecting it launches no job. An
+    empty ``rows`` is built on the JVM side: PySpark turns an empty pandas
+    frame into an RDD-backed relation whose collect runs a job.
     """
     import pandas as pd
     from pyspark.sql.types import StructType
 
-    if isinstance(schema, str):
-        # real DDL parse, not schema.split(',') — comma-bearing types
-        # (decimal(10,2), map<string,int>, struct<...>) would break a split
-        names = StructType.fromDDL(schema).fieldNames()
-    else:  # StructType
-        names = list(schema.fieldNames())
-    pdf = pd.DataFrame(list(rows), columns=names)
+    # real DDL parse, not schema.split(',') — comma-bearing types
+    # (decimal(10,2), map<string,int>, struct<...>) would break a split
+    struct = StructType.fromDDL(schema) if isinstance(schema, str) else schema
+    if isinstance(rows, pd.DataFrame):
+        pdf = rows
+    else:
+        pdf = pd.DataFrame(list(rows), columns=struct.fieldNames())
+    if pdf.empty:
+        jss = spark._jsparkSession
+        jdf = jss.createDataFrame(spark._jvm.java.util.ArrayList(), jss.parseDataType(struct.json()))
+        return DataFrame(jdf, spark)
     return spark.createDataFrame(pdf, schema=schema)
 
 

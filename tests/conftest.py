@@ -88,3 +88,66 @@ def jobs_in_group(spark):
         return len(sc.statusTracker().getJobIdsForGroup(group))
 
     return count
+
+
+@pytest.fixture(scope="session")
+def pruned_routes(spark):
+    """Route helpers for ``bm25_search_pruned``.
+
+    ``route_of(result)`` names the route that built a result, from its plan:
+    "driver" (a local relation), "doc_aligned" (``MapInPandas``) or
+    "shard_group" (``FlatMapGroupsInPandas``).
+
+    ``above_cut(pairs, analyzer)`` repeats (qid, query) pairs under qids
+    ``<qid>@<n>`` until the batch has more analyzed (qid, term) rows than the
+    driver route takes, so the batch runs distributed; ``base(qid)`` maps a
+    copy's qid back.
+
+    ``each(index, pairs, k)`` yields (route, pairs, result) for every route
+    ``index`` has: the pairs as given on the driver route, then the pairs
+    above the cut on the doc-aligned route (doc-aligned indexes only) and on
+    the shard-group route. Queries go in as a DataFrame; each result's route
+    is checked."""
+    import dataclasses
+    import types
+
+    import pandas as pd
+
+    from rustserini_spark.operators import search
+
+    def route_of(result) -> str:
+        # the optimized logical plan's nodes: a cached relation is a leaf
+        # there, so the build's own Python stages do not show
+        names, todo = [], [result._jdf.queryExecution().optimizedPlan()]
+        while todo:
+            node = todo.pop()
+            names.append(node.nodeName())
+            kids = node.children()
+            todo.extend(kids.apply(i) for i in range(kids.size()))
+        if names == ["LocalRelation"]:
+            return "driver"
+        if "FlatMapGroupsInPandas" in names:
+            return "shard_group"
+        return "doc_aligned" if "MapInPandas" in names else "other"
+
+    def above_cut(pairs, analyzer: str) -> list:
+        per_copy = len(search.query_terms_local(pairs, analyzer)[0])
+        copies = search.DRIVER_ROUTE_MAX_QUERY_TERMS // per_copy + 1
+        return [(f"{qid}@{n}", q) for n in range(copies) for qid, q in pairs]
+
+    def each(index, pairs, k: int):
+        big = above_cut(pairs, index.analyzer)
+        runs = [("driver", index, pairs)]
+        if index.meta.get("doc_aligned"):
+            runs.append(("doc_aligned", index, big))
+        grouped = {key: v for key, v in index.meta.items() if key != "doc_aligned"}
+        runs.append(("shard_group", dataclasses.replace(index, meta=grouped), big))
+        for route, idx, ps in runs:
+            qdf = spark.createDataFrame(pd.DataFrame(ps, columns=["qid", "query"]))
+            result = search.bm25_search_pruned(idx, qdf, k=k)
+            assert route_of(result) == route, route
+            yield route, ps, result
+
+    return types.SimpleNamespace(
+        route_of=route_of, above_cut=above_cut, base=lambda qid: qid.split("@")[0], each=each
+    )

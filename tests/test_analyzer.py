@@ -71,6 +71,26 @@ def test_simple_tokens_col_matches_driver_side(spark, documents):
         assert got[r.doc_id] == simple_tokenize_text(r.text)
 
 
+def test_oracle_tokenizer_matches_simple_tokens_on_dotted_capital_i(spark):
+    """DuckDB lowercases İ (U+0130) to a plain ``i``; Spark and Python give
+    ``i`` + U+0307, a separator. The DuckDB oracles' tokenizer must split
+    ``İstanbul`` the way the engine does."""
+    import duckdb
+
+    import __spark_entry__ as e
+
+    texts = ["İstanbul", "DİYARBAKIR and İzmir", "Istanbul istanbul"]
+    df = spark.createDataFrame(pd.DataFrame({"text": texts}))
+    spark_toks = [list(r.tokens) for r in df.select(simple_tokens_col("text").alias("tokens")).collect()]
+    con = duckdb.connect()
+    oracle_toks = [
+        list(con.execute(f"SELECT {e._TOKS} FROM (SELECT $1::VARCHAR AS text)", [t]).fetchone()[0])
+        for t in texts
+    ]
+    assert spark_toks[0] == ["i", "stanbul"]
+    assert oracle_toks == spark_toks == [simple_tokenize_text(t) for t in texts]
+
+
 def test_index_query_analysis_parity():
     # The same function serves both paths, so parity is structural; lock it.
     doc = "Scientific minds led to the success of the Manhattan Project."

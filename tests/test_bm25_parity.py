@@ -9,6 +9,7 @@ table (500 docs at sf0.001) plus a tiny hand-checkable corpus.
 import numpy as np
 import pandas as pd
 import pytest
+from pyspark.sql import functions as F
 
 from oracle.bm25_ref import bm25_rank
 from rustserini_spark.operators.index_build import build_index, expected_idf
@@ -59,8 +60,8 @@ def _collect(result_df):
     return out
 
 
-def _assert_parity(got, k=10):
-    for qid, query in QUERIES:
+def _assert_parity(got, k=10, queries=QUERIES):
+    for qid, query in queries:
         expected = bm25_rank(TINY_CORPUS, query, k=k)
         actual = got.get(qid, [])
         assert len(actual) == len(expected), (qid, actual, expected)
@@ -83,20 +84,24 @@ def test_exhaustive_matches_oracle(tiny_index, queries_df):
     _assert_parity(_collect(bm25_search(tiny_index, queries_df, k=10)))
 
 
-def test_pruned_matches_oracle(tiny_index, queries_df):
-    _assert_parity(_collect(bm25_search_pruned(tiny_index, queries_df, k=10)))
+def test_pruned_matches_oracle(tiny_index, pruned_routes):
+    """On every route: the batch on the driver route, and the batch repeated
+    above the driver route's cut on the doc-aligned and shard-group routes."""
+    for _route, pairs, result in pruned_routes.each(tiny_index, QUERIES, k=10):
+        _assert_parity(_collect(result), queries=pairs)
 
 
-def test_pruned_equals_exhaustive_small_k(tiny_index, queries_df):
+def test_pruned_equals_exhaustive_small_k(tiny_index, queries_df, pruned_routes):
     a = _collect(bm25_search(tiny_index, queries_df, k=2))
-    b = _collect(bm25_search_pruned(tiny_index, queries_df, k=2))
-    # identical rankings; scores may differ in the last ulp (summation order)
-    assert {q: [(r, d) for r, d, _ in v] for q, v in a.items()} == {
-        q: [(r, d) for r, d, _ in v] for q, v in b.items()
-    }
-    for q in a:
-        for (_, _, sa), (_, _, sb) in zip(a[q], b[q]):
-            assert sa == pytest.approx(sb, abs=1e-9)
+    base = pruned_routes.base
+    for route, pairs, result in pruned_routes.each(tiny_index, QUERIES, k=2):
+        b = _collect(result)
+        assert set(b) == {q for q, _ in pairs if base(q) in a}, route
+        # identical rankings; scores may differ in the last ulp (summation order)
+        for q, v in b.items():
+            assert [(r, d) for r, d, _ in v] == [(r, d) for r, d, _ in a[base(q)]], (route, q)
+            for (_, _, sb), (_, _, sa) in zip(v, a[base(q)]):
+                assert sa == pytest.approx(sb, abs=1e-9)
 
 
 def test_list_queries_match_dataframe_queries(tiny_index, queries_df):
@@ -142,6 +147,27 @@ def test_idf_memo_fallback_matches_cache(tiny_index, queries_df):
     assert ib.MAX_IDF_CACHE_TERMS >= 1_000_000  # web-vocab guard stays in place
 
 
+def test_df_beside_idf_sums_to_fetched_postings(tiny_index):
+    """The pruned search sizes a batch by Σ df over its terms, read beside
+    idf without a job. On the preloaded cache and on the memo fallback alike,
+    that sum equals Σ n_docs of the blocks the batch's fetch returns."""
+    from rustserini_spark.operators.search import query_terms_local
+    from rustserini_spark.session import col_in
+
+    _, terms = query_terms_local(QUERIES, tiny_index.analyzer)
+    fetched = tiny_index.postings.filter(col_in("term", terms)).agg(F.sum("n_docs")).collect()[0][0]
+    assert fetched > 0
+    tiny_index.materialize()
+    assert sum(df for _, df in tiny_index.idf_for_terms(terms).values()) == fetched
+    saved_cache, saved_memo = tiny_index.idf_cache, dict(tiny_index._idf_memo)
+    try:
+        tiny_index.idf_cache = None
+        tiny_index._idf_memo.clear()
+        assert sum(df for _, df in tiny_index.idf_for_terms(terms).values()) == fetched
+    finally:
+        tiny_index.idf_cache, tiny_index._idf_memo = saved_cache, saved_memo
+
+
 def test_canonical_query_top1(tiny_index, queries_df):
     # reference parity style: top-1 docid for the canonical Manhattan-Project
     # query is doc 0 (/root/reference/tests/searcher_test.rs:99)
@@ -177,8 +203,9 @@ def test_n_shards_is_a_build_parameter(spark, documents, n_shards):
 
 
 @pytest.mark.parametrize("pruned", [False, True])
-def test_parity_on_documents_table(spark, documents, pruned):
-    """500-doc driver corpus, multi-term queries sampling head/mid/tail terms."""
+def test_parity_on_documents_table(spark, documents, pruned, pruned_routes):
+    """500-doc driver corpus, multi-term queries sampling head/mid/tail terms;
+    the pruned search on every route."""
     corpus = {r.doc_id: r.text for r in documents.collect()}
     queries = [
         ("d0", "spark query window merge"),
@@ -186,17 +213,22 @@ def test_parity_on_documents_table(spark, documents, pruned):
         ("d2", "slow small filter"),
         ("d3", "hash join stream data"),
     ]
-    qdf = spark.createDataFrame(pd.DataFrame(queries, columns=["qid", "query"]))
     index = build_index(spark, documents, block_size=32, seg_docs=64, n_shards=8)
-    fn = bm25_search_pruned if pruned else bm25_search
-    got = _collect(fn(index, qdf, k=10))
-    for qid, query in queries:
-        expected = bm25_rank(corpus, query, k=10)
-        actual = got.get(qid, [])
-        assert [a[1] for a in actual] == [e[0] for e in expected], qid
-        np.testing.assert_allclose(
-            [a[2] for a in actual], [e[1] for e in expected], atol=1e-9
-        )
+    if pruned:
+        runs = list(pruned_routes.each(index, queries, k=10))
+    else:
+        qdf = spark.createDataFrame(pd.DataFrame(queries, columns=["qid", "query"]))
+        runs = [("exhaustive", queries, bm25_search(index, qdf, k=10))]
+    expected_of = {query: bm25_rank(corpus, query, k=10) for _, query in queries}
+    for route, pairs, result in runs:
+        got = _collect(result)
+        for qid, query in pairs:
+            expected = expected_of[query]
+            actual = got.get(qid, [])
+            assert [a[1] for a in actual] == [e[0] for e in expected], (route, qid)
+            np.testing.assert_allclose(
+                [a[2] for a in actual], [e[1] for e in expected], atol=1e-9
+            )
 
 
 def test_maxscore_head_term_decode_bound():
@@ -285,22 +317,42 @@ def test_adaptive_cut_survives_boundary_rounded_ties(spark):
     ]
 
 
-def test_batch_build_round_trips_independent_of_term_count(tiny_index, py4j_round_trips):
-    """Building a lazy pruned-search batch costs a fixed number of py4j round
-    trips: the term predicate is one ``col_in`` call, not one ``lit`` per
-    distinct term (thousands of round trips for a 512-query batch)."""
+def test_batch_build_round_trips_independent_of_term_count(
+    tiny_index, py4j_round_trips, pruned_routes
+):
+    """A pruned-search call costs a fixed number of py4j round trips on
+    either route: the term predicate is one ``col_in`` call, not one ``lit``
+    per distinct term (thousands of round trips for a 512-query batch).
+    Each route is compared with itself: a driver-route call runs its fetch
+    job, a distributed one only builds its plan."""
     rng = np.random.default_rng(7)
     letters = np.array(list("bcdfghjklmnpqrstvwxz"))
 
     def word():
         return "".join(rng.choice(letters, 12))
 
-    def round_trips(queries):
-        return py4j_round_trips.of(lambda: bm25_search_pruned(tiny_index, queries, k=10))
+    def round_trips(queries, route):
+        result = []
+        n = py4j_round_trips.of(
+            lambda: result.append(bm25_search_pruned(tiny_index, queries, k=10))
+        )
+        assert pruned_routes.route_of(result[0]) == route
+        return n
 
-    one = round_trips([("q0", f"manhattan {word()}")])
-    batch = round_trips([(f"q{i}", f"{word()} {word()}") for i in range(512)])
-    assert batch <= one + 20, (one, batch)
+    tiny_index.materialize()  # idf from the preloaded cache: no lookup job
+    # driver route: one term vs every vocabulary word plus 120 unknown words
+    words = sorted({w for t in TINY_CORPUS.values() for w in t.lower().split()})
+    one = round_trips([("q0", "manhattan")], "driver")
+    batch = round_trips(
+        [(f"q{i}", f"{words[i % len(words)]} {word()}") for i in range(120)], "driver"
+    )
+    assert batch <= one + 20, ("driver", one, batch)
+
+    # distributed route: a batch just above the cut with one term vs 512
+    # queries of two unknown words each
+    one = round_trips(pruned_routes.above_cut([("q0", "manhattan")], "porter"), "doc_aligned")
+    batch = round_trips([(f"q{i}", f"{word()} {word()}") for i in range(512)], "doc_aligned")
+    assert batch <= one + 20, ("distributed", one, batch)
 
 
 def test_porter_apostrophe_term_ranks(spark):

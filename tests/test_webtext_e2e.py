@@ -184,6 +184,88 @@ def test_canonical_query_hits_doc0(spark, webtext, wt_index):
     assert top.url == "https://example.org/doc/0000000000"
 
 
+def test_one_query_call_runs_one_fetch_job(spark, webtext, wt_index, monkeypatch):
+    """On a materialized index with the default docid bucket count (64
+    cached partitions), a one-query call is scored on the driver: the call
+    and the collect of its result run exactly one job (the JVM fetch of the
+    matched blocks) with no shuffle, no Python stage above the cached scan,
+    no new broadcast and no new persisted RDD. Degenerate queries take the
+    same route and match the oracle, or return the empty result with no job
+    at all."""
+    from rustserini_spark.operators.search import RESULT_SCHEMA
+    from rustserini_spark.operators.webtext import auto_id_buckets
+
+    sc = spark.sparkContext
+    index = wt_index.index
+    corpus = _oracle_corpus(webtext, wt_index.docmap)
+    stage_store = sc._jsc.sc().statusStore()
+    sql_store = spark._jsparkSession.sharedState().statusStore()
+    broadcasts = []
+    real_broadcast = sc.broadcast
+    monkeypatch.setattr(sc, "broadcast", lambda v: broadcasts.append(v) or real_broadcast(v))
+    assert auto_id_buckets(N_DOCS) == 64
+
+    def call(tag: str, query: str, k: int):
+        group = f"routed-{tag}"
+        persisted = sc._jsc.getPersistentRDDs().size()
+        sc.setJobGroup(group, group)
+        try:
+            result = bm25_search_pruned(index, [(tag, query)], k=k)
+            rows = result.collect()
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
+            sc.setLocalProperty("spark.job.description", None)
+        assert result.schema == RESULT_SCHEMA, tag
+        assert sc._jsc.getPersistentRDDs().size() == persisted, tag
+        assert not broadcasts, tag
+        jobs = sc.statusTracker().getJobIdsForGroup(group)
+        for jid in jobs:
+            for sid in sc.statusTracker().getJobInfo(jid).stageIds:
+                st = stage_store.lastStageAttempt(sid)
+                assert st.shuffleWriteBytes() == st.shuffleReadBytes() == 0, tag
+        execs = sql_store.executionsList()
+        plans = [
+            e.physicalPlanDescription()
+            for e in (execs.apply(i) for i in range(execs.size()))
+            if e.description() == group
+        ]
+        for plan in plans:
+            # the nodes this call ran, above the cached relation's scan
+            ran = plan.split("InMemoryTableScan")[0]
+            for node in ("Exchange", "InPandas", "InArrow", "EvalPython", "Broadcast"):
+                assert node not in ran, (tag, node, ran)
+        # the fetch is the one execution that reads the cache; collecting
+        # the local result is an execution without a job
+        return rows, len(jobs), sum("InMemoryTableScan" in p for p in plans)
+
+    for tag, query in [
+        ("empty", ""),
+        ("blank", " \t\n "),
+        ("stopwords", "the of and to"),
+        ("oov", "zzqxv qqqzzyx"),
+    ]:
+        rows, n_jobs, n_fetches = call(tag, query, 10)
+        assert rows == [] and n_jobs == n_fetches == 0, (tag, rows, n_jobs, n_fetches)
+
+    for tag, query, k in [
+        ("single", "atomic bomb world war", 10),
+        ("oov_mixed", "manhattan zzqxv project", 10),
+        ("repeated", "manhattan manhattan", 10),  # qtf 2
+        ("k_above_matches", "w0003 research", 1000),
+    ]:
+        rows, n_jobs, n_fetches = call(tag, query, k)
+        assert n_jobs == 1 and n_fetches == 1, (tag, n_jobs, n_fetches)
+        expected = bm25_rank(corpus, query, k=k)
+        assert expected, tag
+        if tag == "k_above_matches":
+            assert len(expected) < k
+        got = sorted((r.rank, r.doc_id, r.score) for r in rows)
+        assert [r[0] for r in got] == list(range(1, len(expected) + 1)), tag
+        assert [r[1] for r in got] == [d for d, _ in expected], tag
+        for (_, _, s), (_, es) in zip(got, expected):
+            assert s == pytest.approx(es, abs=1e-9)
+
+
 def test_checkpoint_resume(spark, webtext, tmp_path_factory):
     ckpt = str(tmp_path_factory.mktemp("bm25_ckpt"))
     wt1 = index_webtext(
