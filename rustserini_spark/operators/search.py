@@ -19,18 +19,24 @@ Two scoring strategies, both returning identical rankings:
   or head-term-dominated workloads: nothing ever materializes one query's full
   postings in a single task.
 
-* ``bm25_search_pruned`` (block-max pruned): ``_score_blocks`` runs a lossless
-  MaxScore/block-max algorithm in NumPy over a doc-disjoint group of matched
-  blocks — blocks whose upper bound cannot reach the running top-k threshold
-  are never decoded. Which process runs it depends on the batch:
+* ``bm25_search_pruned``: ``_score_blocks`` is its one exact-scoring body,
+  run over a doc-disjoint group of matched blocks. Queries whose matched
+  postings in the group fit ``KERNEL_MAX_QUERY_POSTINGS`` are scored
+  together in one vectorized NumPy pass (every block decoded once, one
+  grouped sum per (qid, doc), one top-k); larger ones each run a lossless
+  MaxScore/block-max algorithm that never decodes a block whose upper bound
+  cannot reach the running top-k threshold. Which process runs it depends
+  on the batch's (query, posting) pairs, Σ df over its analyzed
+  (qid, term) rows, read from the cached dictionary without a job:
 
-  - a small batch (at most ``DRIVER_ROUTE_MAX_QUERY_TERMS`` analyzed
-    (qid, term) rows, and Σ df over its terms within
-    ``DECODE_CACHE_MAX_POSTINGS``) is scored on the DRIVER, like the
-    reference's one-process searcher: one JVM-only job fetches the matched
-    blocks (no Python worker, no exchange), ``_score_blocks`` runs once over
-    all of them, and the ranked result comes back as a local relation. The
-    fetch runs before the call returns;
+  - a batch with at most ``DRIVER_ROUTE_MAX_PAIRS`` pairs is scored on the
+    DRIVER, like the reference's one-process searcher: one JVM-only job
+    (at most ``defaultParallelism`` tasks) fetches the matched blocks (no
+    Python worker, no exchange), ``_score_blocks`` runs once over all of
+    them, and the ranked result comes back as a local relation. The fetch
+    runs before the call returns. Collecting the result runs no job;
+    ``count()`` and ``toPandas()`` still run small jobs over the local
+    relation;
   - a larger batch runs ``_score_blocks`` per cached partition
     (``mapInPandas``, doc-aligned indexes) or per shard group
     (``applyInPandas``, disk-opened indexes), and a window merges the local
@@ -54,6 +60,7 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from rustserini_spark.operators.compress import (
+    BLOCK_SIZE_DEFAULT,
     block_upper_bound,
     bm25_impact,
     decode_blocks_batch,
@@ -67,19 +74,41 @@ from rustserini_spark.session import col_in, local_rows_df
 # exhaustive plan instead of silently shipping a huge closure to every task.
 MAX_LOCAL_QUERY_TERMS = 100_000
 
-# Batches with at most this many analyzed (qid, term) rows (about 64
-# queries) are scored on the driver when their matched postings also fit one
-# decode memo. Per-query NumPy work runs single-threaded there, so big
-# batches belong on the executors: on perfbench's 6,000-doc serve index in
-# 4 partitions (local[4], median call ms, driver vs distributed) 1 query
-# read 86 vs 251, 256 queries 151 vs 240, and 1,024 queries 395 vs 365. The
-# crossover falls as cores grow.
-DRIVER_ROUTE_MAX_QUERY_TERMS = 256
+# Batches that score at most this many (query, posting) pairs — Σ df over
+# their analyzed (qid, term) rows — are scored on the driver; larger ones on
+# the executors. Crossover on perfbench's 6,000-doc serve index in 4
+# partitions (local[4], 4 cores, median of 12 alternating calls, both routes
+# on the batch kernel; BENCH/search_route_crossover.json):
+#
+#   queries   pairs       driver ms   distributed ms
+#         1         468        54         134
+#        64      48,789        68         143
+#       256     199,527       112         192
+#     1,024     786,699       238         302
+#     2,048   1,587,882       419         477
+#     4,096   3,183,349       730         708
+#
+# Fitted: driver 65 ms + 0.21 µs/pair, distributed 150 ms + 0.18 µs/pair
+# (its fixed cost is a Python stage, a shuffle and a window), so the
+# crossover here is ~2.8M pairs. More cores shrink only the distributed
+# per-pair cost; even at zero it wins only above (150 − 65) ms ÷ 0.21 µs ≈
+# 400k pairs (and 150 ms ÷ 0.21 µs ≈ 700k with the driver's fixed cost
+# ignored). The cut sits below all three.
+DRIVER_ROUTE_MAX_PAIRS = 300_000
+
+# Blocks MaxScore decodes between θ re-tightenings. A query whose matched
+# postings in a scoring group fit CHUNK full blocks is scored by the batch
+# kernel: MaxScore could skip at most one chunk of decodes for it, and its
+# bookkeeping costs more than those decodes.
+CHUNK = 16
+KERNEL_MAX_QUERY_POSTINGS = CHUNK * BLOCK_SIZE_DEFAULT
+# (query, posting) pairs the batch kernel expands at once (whole queries;
+# about 40 MB of transient arrays)
+KERNEL_MAX_PAIRS = 1 << 20
 
 # Per-shard-task decode memo budget (decoded postings retained), so a
 # head-term-heavy batch cannot hold an unbounded slice of the corpus decoded
-# in one task. It also caps the matched postings (Σ df) of a batch scored on
-# the driver.
+# in one task.
 DECODE_CACHE_MAX_POSTINGS = 4_000_000
 
 # Above this pickled size the per-batch query state (per-query term weights +
@@ -261,11 +290,10 @@ def _shard_topk(
     blocks are memoized in ``decoded_cache`` so queries sharing head terms
     decode each block once per shard.
 
-    A query with at most ``CHUNK`` blocks on this shard is scored exactly with
-    every block decoded: pruning could skip at most one chunk of decodes, and
-    the MaxScore bookkeeping costs more than those decodes.
+    ``_score_blocks`` sends a query here only when its matched postings in the
+    group exceed ``KERNEL_MAX_QUERY_POSTINGS``; smaller ones go to the batch
+    kernel.
     """
-    CHUNK = 16  # blocks decoded between θ re-tightenings
 
     def decode_rows(sub: np.ndarray):
         """sub: positions within `rows`. Returns (doc_ids, weighted_impacts)."""
@@ -295,14 +323,6 @@ def _shard_topk(
             z = np.empty(0)
             return z.astype(np.int64), z
         return np.concatenate(parts_d), np.concatenate(parts_imp)
-
-    if rows.size <= CHUNK:
-        d, imp = decode_rows(np.arange(rows.size))
-        cand, inv = np.unique(d, return_inverse=True)
-        scores = np.zeros(cand.size)
-        np.add.at(scores, inv, imp)
-        order = np.lexsort((cand, -scores))[:k]
-        return cand[order], scores[order]
 
     weighted_max = qtf_row * max_impact[rows]
     t_idx = term_idx[rows]
@@ -394,6 +414,76 @@ class _DecodeCache:
         self._n += hit[0].size
 
 
+def _ranges(starts: np.ndarray, lengths: np.ndarray) -> np.ndarray:
+    """Concatenated ``arange(start, start + length)`` for each pair."""
+    return np.arange(lengths.sum()) + np.repeat(starts - (np.cumsum(lengths) - lengths), lengths)
+
+
+def _kernel_topk(
+    q: np.ndarray,
+    t: np.ndarray,
+    w: np.ndarray,
+    rows_by_term: np.ndarray,
+    term_bounds: np.ndarray,
+    term_postings: np.ndarray,
+    bufs: list,
+    n_docs_arr: np.ndarray,
+    idf: np.ndarray,
+    k: int,
+    k1: float,
+    b: float,
+    avgdl: float,
+) -> tuple[np.ndarray, np.ndarray, np.ndarray]:
+    """Exact top-k of many queries at once, every matched block decoded.
+
+    One row per (query, term) of the batch: query ``q`` (ascending), group
+    term ``t``, weight ``w`` (qtf). Each term's blocks are decoded once, the
+    rows expand into (query, posting) pairs, the pairs are summed per
+    (query, doc) after one sort on a single int64 key, and each query's
+    docs are ranked by score desc, doc_id asc (Lucene's tie-break). Within
+    a (query, doc) the impacts add in the query's term order, so docs with
+    equal impacts get equal sums. Returns (query, doc_id, score), each
+    query's rows in rank order."""
+    terms = np.unique(t)
+    lo = term_bounds[terms]
+    rows = rows_by_term[_ranges(lo, term_bounds[terms + 1] - lo)]
+    d, tf, dl, bidx = decode_blocks_batch([bufs[r] for r in rows], n_docs_arr[rows])
+    imp = bm25_impact(tf, dl, idf[rows][bidx], k1, b, avgdl)
+    # term j's postings are d[start[j] : start[j] + term_postings[terms[j]]]
+    n_post = term_postings[terms]
+    start = np.cumsum(n_post) - n_post
+    j = np.searchsorted(terms, t)
+    n = n_post[j]
+    src = _ranges(start[j], n)
+    q0, n_q = int(q[0]), int(q[-1] - q[0]) + 1
+    d0, span = int(d.min()), int(d.max() - d.min()) + 1
+    uniq_docs = None
+    if n_q * span >= 1 << 62:  # sparse doc ids: key on their dense rank
+        uniq_docs, d = np.unique(d, return_inverse=True)
+        d0, span = 0, uniq_docs.size
+    key = np.repeat((q - q0) * span, n) + (d[src] - d0)
+    order = np.argsort(key, kind="stable")
+    key = key[order]
+    head = np.flatnonzero(np.concatenate(([True], key[1:] != key[:-1])))
+    score = np.add.reduceat((imp[src] * np.repeat(w, n))[order], head)
+    gq, gdoc = np.divmod(key[head], span)
+    # Each query's k-th score, to within its last `drop` bits: one sort on
+    # (query, score desc) as one int64, the score's low bits dropped (the
+    # bits of a non-negative double order like the double). Only the docs at
+    # or above it, about k per query, get the exact order (score desc, then
+    # doc_id asc, kept by the stable lexsort).
+    drop = n_q.bit_length()
+    coarse = (gq << (63 - drop)) | ((np.iinfo(np.int64).max - score.view(np.int64)) >> drop)
+    q_start = np.searchsorted(gq, np.arange(n_q + 1))
+    kth = np.sort(coarse)[np.minimum(q_start[:-1] + k, q_start[1:]) - 1]
+    sel = np.flatnonzero(coarse <= kth[gq])
+    sel = sel[np.lexsort((-score[sel], gq[sel]))]
+    gq, gdoc, score = gq[sel], gdoc[sel], score[sel]
+    keep = np.arange(gq.size) - np.searchsorted(gq, gq) < k
+    gdoc = gdoc[keep] + d0 if uniq_docs is None else uniq_docs[gdoc[keep]]
+    return gq[keep] + q0, gdoc, score[keep]
+
+
 def _score_blocks(
     pdf: pd.DataFrame,
     per_query: dict[str, dict[str, float]],
@@ -407,46 +497,80 @@ def _score_blocks(
     of matched blocks: every doc in ``pdf`` has all its matched postings in
     ``pdf``, so its local top-k holds every doc of the group's global top-k.
     Each query's rows come out in rank order. ``per_query`` maps qid ->
-    {term: qtf}."""
+    {term: qtf}.
+
+    This is the one exact-scoring body; every route of
+    ``bm25_search_pruned`` calls it. Queries whose matched postings in the
+    group fit ``KERNEL_MAX_QUERY_POSTINGS`` are scored together by the batch
+    kernel (``_kernel_topk``), about ``KERNEL_MAX_PAIRS`` (query, posting)
+    pairs at a time; larger ones each run ``_shard_topk``'s
+    MaxScore."""
+    empty = pd.DataFrame(columns=["qid", "doc_id", "score"])
     if pdf.empty:
-        return pd.DataFrame(columns=["qid", "doc_id", "score"])
-    terms_arr = pdf["term"].to_numpy()
-    uniq_terms, term_idx = np.unique(terms_arr, return_inverse=True)
+        return empty
+    uniq_terms, term_idx = np.unique(pdf["term"].to_numpy(), return_inverse=True)
     # each term's rows, ascending: one stable sort of the term index
     by_term = np.argsort(term_idx, kind="stable")
     bounds = np.searchsorted(term_idx[by_term], np.arange(uniq_terms.size + 1))
-    rows_of = {t: by_term[bounds[i] : bounds[i + 1]] for i, t in enumerate(uniq_terms)}
     n_docs_arr = pdf["n_docs"].to_numpy(dtype=np.int64)
-    first_doc = pdf["first_doc"].to_numpy(dtype=np.int64)
-    last_doc = pdf["last_doc"].to_numpy(dtype=np.int64)
-    idf = np.array([idf_by_term.get(t, 0.0) for t in terms_arr])
-    max_impact = block_upper_bound(
-        pdf["max_tf"].to_numpy(), pdf["min_dl"].to_numpy(), idf, k1, b, avgdl
-    )
+    term_postings = np.bincount(term_idx, weights=n_docs_arr, minlength=uniq_terms.size).astype(np.int64)
+    idf = np.array([idf_by_term.get(t, 0.0) for t in uniq_terms.tolist()])[term_idx]
     bufs = list(pdf["postings_bin"])
-    decoded_cache = _DecodeCache()
 
-    out_qid, out_doc, out_score = [], [], []
-    for qid, tw in per_query.items():
-        present = [t for t in tw if t in rows_of]
-        if not present:
-            continue
-        rows = np.concatenate([rows_of[t] for t in present])
-        qtf_row = np.concatenate([np.full(rows_of[t].size, tw[t]) for t in present])
-        docs, scores = _shard_topk(
-            rows, qtf_row, bufs, n_docs_arr, first_doc, last_doc, max_impact,
-            idf, term_idx, uniq_terms.size, k, k1, b, avgdl, decoded_cache,
+    # one row per (query, term in this group)
+    pos_of = {t: i for i, t in enumerate(uniq_terms.tolist())}
+    qids = list(per_query)
+    q_l, t_l, w_l = [], [], []
+    for qi, tw in enumerate(per_query.values()):
+        for term, qtf in tw.items():
+            ti = pos_of.get(term)
+            if ti is not None:
+                q_l.append(qi)
+                t_l.append(ti)
+                w_l.append(qtf)
+    if not q_l:
+        return empty
+    q, t, w = np.array(q_l), np.array(t_l), np.array(w_l, dtype=np.float64)
+    q_postings = np.bincount(q, weights=term_postings[t], minlength=len(qids))
+    small = q_postings <= KERNEL_MAX_QUERY_POSTINGS
+
+    parts = []
+    # the kernel's queries, whole, in batches of about KERNEL_MAX_PAIRS pairs
+    kq = np.where(small, q_postings, 0).astype(np.int64)
+    batch_of = np.where(small, (np.cumsum(kq) - kq) // KERNEL_MAX_PAIRS, -1)[q]
+    for batch in np.unique(batch_of[batch_of >= 0]):
+        sel = batch_of == batch
+        parts.append(
+            _kernel_topk(
+                q[sel], t[sel], w[sel], by_term, bounds, term_postings,
+                bufs, n_docs_arr, idf, k, k1, b, avgdl,
+            )
         )
-        out_qid.extend([qid] * docs.size)
-        out_doc.append(docs)
-        out_score.append(scores)
-    if not out_qid:
-        return pd.DataFrame(columns=["qid", "doc_id", "score"])
+
+    big = np.flatnonzero(~small & (q_postings > 0))
+    if big.size:
+        first_doc = pdf["first_doc"].to_numpy(dtype=np.int64)
+        last_doc = pdf["last_doc"].to_numpy(dtype=np.int64)
+        max_impact = block_upper_bound(
+            pdf["max_tf"].to_numpy(), pdf["min_dl"].to_numpy(), idf, k1, b, avgdl
+        )
+        decoded_cache = _DecodeCache()
+        q_start = np.searchsorted(q, np.arange(len(qids) + 1))
+        for qi in big:
+            mine = slice(q_start[qi], q_start[qi + 1])
+            n_blk = bounds[t[mine] + 1] - bounds[t[mine]]
+            docs, scores = _shard_topk(
+                by_term[_ranges(bounds[t[mine]], n_blk)], np.repeat(w[mine], n_blk), bufs, n_docs_arr, first_doc, last_doc, max_impact,
+                idf, term_idx, uniq_terms.size, k, k1, b, avgdl, decoded_cache,
+            )
+            parts.append((np.full(docs.size, qi), docs, scores))
+    if not parts:
+        return empty
     return pd.DataFrame(
         {
-            "qid": out_qid,
-            "doc_id": np.concatenate(out_doc),
-            "score": np.concatenate(out_score),
+            "qid": np.asarray(qids, dtype=object)[np.concatenate([p[0] for p in parts])],
+            "doc_id": np.concatenate([p[1] for p in parts]),
+            "score": np.concatenate([p[2] for p in parts]),
         }
     )
 
@@ -456,15 +580,23 @@ def bm25_search_pruned(index: BM25Index, queries, k: int = 10) -> DataFrame:
     pairs. Rankings are the same on every route; a score may differ between
     routes in the last ulp (the per-doc sums add in a different order).
 
-    Driver route: a batch with at most ``DRIVER_ROUTE_MAX_QUERY_TERMS``
-    analyzed (qid, term) rows whose terms' Σ df is within
-    ``DECODE_CACHE_MAX_POSTINGS``. The matched blocks of its in-vocabulary
-    terms are fetched in one JVM-only job and scored in this process. That
-    is exact on any index — doc-aligned, disk-opened, or an uncompacted
-    union of segments — because the union of all blocks holds every doc's
-    complete postings. The job runs before this function returns; the result
-    is a local relation, so collecting it runs none. A batch with no
-    in-vocabulary term runs no job at all.
+    Every route scores with ``_score_blocks``: queries with at most
+    ``KERNEL_MAX_QUERY_POSTINGS`` matched postings in a group go through its
+    batch kernel together, larger ones through MaxScore one by one.
+
+    Routes are chosen by the batch's (query, posting) pairs: Σ df over its
+    analyzed (qid, term) rows, from the index's cached (idf, df), so no job.
+
+    Driver route: at most ``DRIVER_ROUTE_MAX_PAIRS`` pairs (the measured
+    crossover table is at the constant). The matched blocks of its
+    in-vocabulary terms are fetched in one JVM-only job of at most
+    ``defaultParallelism`` tasks and scored in this process. That is exact
+    on any index — doc-aligned, disk-opened, or an uncompacted union of
+    segments — because the union of all blocks holds every doc's complete
+    postings. The job runs before this function returns; the result is a
+    local relation, so ``collect()`` on it runs none, while ``count()`` and
+    ``toPandas()`` run small jobs over it. A batch with no in-vocabulary
+    term runs no job at all.
 
     Distributed routes (larger batches; above ``MAX_LOCAL_QUERY_TERMS`` the
     exhaustive ``bm25_search`` instead) — document-sharded, the
@@ -498,15 +630,16 @@ def bm25_search_pruned(index: BM25Index, queries, k: int = 10) -> DataFrame:
     idf_by_term = {t: idf for t, (idf, _df) in stats.items()}
     k1, b, avgdl = index.k1, index.b, (index.avgdl or 1.0)
 
-    if (
-        len(qt_rows) <= DRIVER_ROUTE_MAX_QUERY_TERMS
-        and sum(df for _idf, df in stats.values()) <= DECODE_CACHE_MAX_POSTINGS
-    ):
+    # the (query, posting) pairs the batch scores, from the cached df
+    pairs = sum(stats[term][1] for _qid, term, _qtf in qt_rows if term in stats)
+    if pairs <= DRIVER_ROUTE_MAX_PAIRS:
         if not idf_by_term:
             return _empty_result(spark)
+        # coalesce is narrow: at most one fetch task per core, no block moves
         blocks = (
             index.postings.filter(col_in("term", sorted(idf_by_term)))
             .select("term", "n_docs", "first_doc", "last_doc", "max_tf", "min_dl", "postings_bin")
+            .coalesce(spark.sparkContext.defaultParallelism)
             .toPandas()
         )
         top = _score_blocks(blocks, per_query, idf_by_term, k, k1, b, avgdl)
@@ -545,7 +678,7 @@ def bm25_search_pruned(index: BM25Index, queries, k: int = 10) -> DataFrame:
         # never leave the task that encoded them), so exact local top-k per
         # PARTITION is valid with no grouping — zero shuffle for the blocks,
         # at build time or per batch. The frame may span several shards;
-        # their union is still doc-disjoint, which is all _shard_topk needs.
+        # their union is still doc-disjoint, which is all _score_blocks needs.
         #
         # MEMORY BOUND: a partition's matched blocks are never all concatenated
         # into one frame. Segments (salt) arrive as contiguous runs in emit

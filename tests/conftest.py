@@ -98,16 +98,16 @@ def pruned_routes(spark):
     "driver" (a local relation), "doc_aligned" (``MapInPandas``) or
     "shard_group" (``FlatMapGroupsInPandas``).
 
-    ``above_cut(pairs, analyzer)`` repeats (qid, query) pairs under qids
-    ``<qid>@<n>`` until the batch has more analyzed (qid, term) rows than the
-    driver route takes, so the batch runs distributed; ``base(qid)`` maps a
-    copy's qid back.
+    ``above_cut()`` is a context manager: calls made inside it count every
+    batch as above the driver route's cut, so they run distributed. The
+    module's cut is restored on exit.
 
-    ``each(index, pairs, k)`` yields (route, pairs, result) for every route
-    ``index`` has: the pairs as given on the driver route, then the pairs
-    above the cut on the doc-aligned route (doc-aligned indexes only) and on
-    the shard-group route. Queries go in as a DataFrame; each result's route
-    is checked."""
+    ``each(index, pairs, k)`` yields (route, result) for every route
+    ``index`` has: the pairs on the driver route, then the same pairs above
+    the cut on the doc-aligned route (doc-aligned indexes only) and on the
+    shard-group route. Queries go in as a DataFrame; each result's route is
+    checked."""
+    import contextlib
     import dataclasses
     import types
 
@@ -130,24 +130,26 @@ def pruned_routes(spark):
             return "shard_group"
         return "doc_aligned" if "MapInPandas" in names else "other"
 
-    def above_cut(pairs, analyzer: str) -> list:
-        per_copy = len(search.query_terms_local(pairs, analyzer)[0])
-        copies = search.DRIVER_ROUTE_MAX_QUERY_TERMS // per_copy + 1
-        return [(f"{qid}@{n}", q) for n in range(copies) for qid, q in pairs]
+    @contextlib.contextmanager
+    def above_cut():
+        saved = search.DRIVER_ROUTE_MAX_PAIRS
+        search.DRIVER_ROUTE_MAX_PAIRS = -1
+        try:
+            yield
+        finally:
+            search.DRIVER_ROUTE_MAX_PAIRS = saved
 
     def each(index, pairs, k: int):
-        big = above_cut(pairs, index.analyzer)
-        runs = [("driver", index, pairs)]
+        runs = [("driver", index)]
         if index.meta.get("doc_aligned"):
-            runs.append(("doc_aligned", index, big))
+            runs.append(("doc_aligned", index))
         grouped = {key: v for key, v in index.meta.items() if key != "doc_aligned"}
-        runs.append(("shard_group", dataclasses.replace(index, meta=grouped), big))
-        for route, idx, ps in runs:
-            qdf = spark.createDataFrame(pd.DataFrame(ps, columns=["qid", "query"]))
-            result = search.bm25_search_pruned(idx, qdf, k=k)
+        runs.append(("shard_group", dataclasses.replace(index, meta=grouped)))
+        qdf = spark.createDataFrame(pd.DataFrame(pairs, columns=["qid", "query"]))
+        for route, idx in runs:
+            with above_cut() if route != "driver" else contextlib.nullcontext():
+                result = search.bm25_search_pruned(idx, qdf, k=k)
             assert route_of(result) == route, route
-            yield route, ps, result
+            yield route, result
 
-    return types.SimpleNamespace(
-        route_of=route_of, above_cut=above_cut, base=lambda qid: qid.split("@")[0], each=each
-    )
+    return types.SimpleNamespace(route_of=route_of, above_cut=above_cut, each=each)

@@ -85,22 +85,22 @@ def test_exhaustive_matches_oracle(tiny_index, queries_df):
 
 
 def test_pruned_matches_oracle(tiny_index, pruned_routes):
-    """On every route: the batch on the driver route, and the batch repeated
-    above the driver route's cut on the doc-aligned and shard-group routes."""
-    for _route, pairs, result in pruned_routes.each(tiny_index, QUERIES, k=10):
-        _assert_parity(_collect(result), queries=pairs)
+    """On every route: the batch on the driver route, and the same batch
+    counted as above the driver route's cut on the doc-aligned and
+    shard-group routes."""
+    for _route, result in pruned_routes.each(tiny_index, QUERIES, k=10):
+        _assert_parity(_collect(result))
 
 
 def test_pruned_equals_exhaustive_small_k(tiny_index, queries_df, pruned_routes):
     a = _collect(bm25_search(tiny_index, queries_df, k=2))
-    base = pruned_routes.base
-    for route, pairs, result in pruned_routes.each(tiny_index, QUERIES, k=2):
+    for route, result in pruned_routes.each(tiny_index, QUERIES, k=2):
         b = _collect(result)
-        assert set(b) == {q for q, _ in pairs if base(q) in a}, route
+        assert set(b) == {q for q, _ in QUERIES if q in a}, route
         # identical rankings; scores may differ in the last ulp (summation order)
         for q, v in b.items():
-            assert [(r, d) for r, d, _ in v] == [(r, d) for r, d, _ in a[base(q)]], (route, q)
-            for (_, _, sb), (_, _, sa) in zip(v, a[base(q)]):
+            assert [(r, d) for r, d, _ in v] == [(r, d) for r, d, _ in a[q]], (route, q)
+            for (_, _, sb), (_, _, sa) in zip(v, a[q]):
                 assert sa == pytest.approx(sb, abs=1e-9)
 
 
@@ -218,11 +218,11 @@ def test_parity_on_documents_table(spark, documents, pruned, pruned_routes):
         runs = list(pruned_routes.each(index, queries, k=10))
     else:
         qdf = spark.createDataFrame(pd.DataFrame(queries, columns=["qid", "query"]))
-        runs = [("exhaustive", queries, bm25_search(index, qdf, k=10))]
+        runs = [("exhaustive", bm25_search(index, qdf, k=10))]
     expected_of = {query: bm25_rank(corpus, query, k=10) for _, query in queries}
-    for route, pairs, result in runs:
+    for route, result in runs:
         got = _collect(result)
-        for qid, query in pairs:
+        for qid, query in queries:
             expected = expected_of[query]
             actual = got.get(qid, [])
             assert [a[1] for a in actual] == [e[0] for e in expected], (route, qid)
@@ -348,10 +348,11 @@ def test_batch_build_round_trips_independent_of_term_count(
     )
     assert batch <= one + 20, ("driver", one, batch)
 
-    # distributed route: a batch just above the cut with one term vs 512
-    # queries of two unknown words each
-    one = round_trips(pruned_routes.above_cut([("q0", "manhattan")], "porter"), "doc_aligned")
-    batch = round_trips([(f"q{i}", f"{word()} {word()}") for i in range(512)], "doc_aligned")
+    # distributed route (every batch counted as above the cut): one term vs
+    # 512 queries of two unknown words each
+    with pruned_routes.above_cut():
+        one = round_trips([("q0", "manhattan")], "doc_aligned")
+        batch = round_trips([(f"q{i}", f"{word()} {word()}") for i in range(512)], "doc_aligned")
     assert batch <= one + 20, ("distributed", one, batch)
 
 
@@ -382,14 +383,15 @@ def test_porter_apostrophe_term_ranks(spark):
 def zipf_segment():
     """One block_size=8 segment over 1,024 docs drawn from a 60-word Zipf
     vocabulary: head words span 100+ blocks, tail words a few. Returns the
-    corpus, each term's block count, and a function running ``_shard_topk``
-    for one query the way shard_search does (its prologue mirrored here)."""
+    corpus, each term's block count, a function running ``_shard_topk`` for
+    one query the way ``_score_blocks`` does (its prologue mirrored here),
+    and one running ``_score_blocks`` itself on the segment."""
     import types
 
     from rustserini_spark.analysis import simple_tokenize_text
     from rustserini_spark.operators.compress import block_upper_bound
     from rustserini_spark.operators.index_build import _encode_segment_pdf
-    from rustserini_spark.operators.search import _DecodeCache, _shard_topk
+    from rustserini_spark.operators.search import _DecodeCache, _score_blocks, _shard_topk
 
     rng = np.random.default_rng(2024)
     vocab = np.array([f"w{i}" for i in range(60)])
@@ -425,16 +427,22 @@ def zipf_segment():
         )
         return docs, scores, rows.size
 
+    def kernel(query_terms, k, _cache):
+        top = _score_blocks(pdf, {"q": {t: 1.0 for t in query_terms}}, idf_by, k, k1, b, avgdl)
+        n_blocks = int(np.isin(terms_arr, query_terms).sum())
+        return top["doc_id"].to_numpy(), top["score"].to_numpy(dtype=np.float64), n_blocks
+
     blocks = dict(zip(*np.unique(terms_arr, return_counts=True)))
     return types.SimpleNamespace(
-        corpus=corpus, blocks=blocks, search=search, new_cache=_DecodeCache
+        corpus=corpus, blocks=blocks, search=search, kernel=kernel, new_cache=_DecodeCache
     )
 
 
-def _assert_segment_parity(seg, queries, k, n_blocks_ok):
+def _assert_segment_parity(seg, queries, k, n_blocks_ok, run=None):
+    run = run or seg.search
     cache = seg.new_cache()  # shared across queries, as in one shard task
     for query_terms in queries:
-        docs, scores, n_blocks = seg.search(query_terms, k, cache)
+        docs, scores, n_blocks = run(query_terms, k, cache)
         assert n_blocks_ok(n_blocks), (query_terms, n_blocks)
         expected = bm25_rank(seg.corpus, " ".join(query_terms), k=k, analyzer="simple")
         assert list(docs) == [d for d, _ in expected], query_terms
@@ -456,8 +464,9 @@ def test_maxscore_path_parity_multi_chunk(zipf_segment):
 
 
 def test_one_chunk_path_parity(zipf_segment):
-    """Queries with at most CHUNK blocks are scored exhaustively in one chunk:
-    same top-k as the oracle, for k below and above the match count."""
+    """Queries with at most CHUNK blocks fit the batch kernel's postings
+    bound, so ``_score_blocks`` scores them exhaustively there: same top-k
+    as the oracle, for k below and above the match count."""
     tail = sorted(t for t, n in zipf_segment.blocks.items() if n <= 8)
     assert len(tail) >= 4
     rng = np.random.default_rng(9)
@@ -465,4 +474,4 @@ def test_one_chunk_path_parity(zipf_segment):
         list(rng.choice(tail, int(rng.integers(1, 3)), replace=False)) for _ in range(20)
     ]
     for k in (3, 10, 1000):
-        _assert_segment_parity(zipf_segment, queries, k, lambda n: n <= 16)
+        _assert_segment_parity(zipf_segment, queries, k, lambda n: n <= 16, zipf_segment.kernel)

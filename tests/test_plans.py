@@ -103,14 +103,14 @@ def test_pruned_search_has_zero_block_shuffle_on_materialized_index(
     """On a materialized (shard-partitioned-cache) index, a distributed query
     batch's plan must reuse the cached partitioning: the ONLY exchange is the
     tiny final top-k window on qid — posting blocks never move. The batch is
-    above the driver route's cut, so it runs distributed."""
+    made to count as above the driver route's cut, so it runs distributed."""
     from rustserini_spark.operators.index_build import build_index
     from rustserini_spark.operators.search import bm25_search_pruned
 
     index = build_index(spark, documents.select("doc_id", "text")).materialize()
-    pairs = pruned_routes.above_cut([("p", "spark query window")], index.analyzer)
-    qdf = spark.createDataFrame(pairs, "qid string, query string")
-    res = bm25_search_pruned(index, qdf, k=10)
+    qdf = spark.createDataFrame([("p", "spark query window")], "qid string, query string")
+    with pruned_routes.above_cut():
+        res = bm25_search_pruned(index, qdf, k=10)
     assert pruned_routes.route_of(res) == "doc_aligned"
     plan = _plan(res)
     lines = plan.splitlines()

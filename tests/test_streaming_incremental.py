@@ -75,19 +75,20 @@ def test_pruned_search_is_exact_on_segmented_index_without_compaction(
     global stats at query time), so block-max pruning is exact on the raw
     union of independently built segments — no compaction required. Holds
     on the driver route (every segment's blocks scored in one process) and
-    on the shard-group route (a batch above the driver route's cut)."""
+    on the shard-group route (the batch counted as above the driver route's
+    cut)."""
     _inp, segs, _ckpt = stream_dirs
     seg_index = open_segmented_index(spark, segs)
     qdf = spark.createDataFrame(pd.DataFrame(QUERIES, columns=["qid", "query"]))
     batch_index = build_index(spark, documents.select("doc_id", "text"))
     expected = _run(bm25_search(batch_index, qdf, k=10))
     routes = []
-    for route, pairs, result in pruned_routes.each(seg_index, QUERIES, k=10):
+    for route, result in pruned_routes.each(seg_index, QUERIES, k=10):
         routes.append(route)
         got = _run(result)
-        assert set(got) == {q for q, _ in pairs if pruned_routes.base(q) in expected}, route
+        assert set(got) == {q for q, _ in QUERIES if q in expected}, route
         for qid, rows in got.items():
-            assert rows == expected[pruned_routes.base(qid)], (route, qid)
+            assert rows == expected[qid], (route, qid)
     assert routes == ["driver", "shard_group"]
 
 

@@ -184,59 +184,81 @@ def test_canonical_query_hits_doc0(spark, webtext, wt_index):
     assert top.url == "https://example.org/doc/0000000000"
 
 
+def _traced_search(spark, index, pairs, k: int, group: str):
+    """Run ``bm25_search_pruned`` and collect its result under job group
+    ``group``. Returns (result, rows, trace): trace holds the group's job
+    count, the tasks its stages ran, shuffle bytes, the physical plans of its SQL
+    executions, and whether a persisted RDD appeared."""
+    sc = spark.sparkContext
+    stage_store = sc._jsc.sc().statusStore()
+    sql_store = spark._jsparkSession.sharedState().statusStore()
+    persisted = sc._jsc.getPersistentRDDs().size()
+    sc.setJobGroup(group, group)
+    try:
+        result = bm25_search_pruned(index, pairs, k=k)
+        rows = result.collect()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    jobs = sc.statusTracker().getJobIdsForGroup(group)
+    tasks = shuffle = 0
+    for jid in jobs:
+        for sid in sc.statusTracker().getJobInfo(jid).stageIds:
+            st = stage_store.lastStageAttempt(sid)
+            # a stage of the cached relation's lineage shows up skipped
+            tasks += st.numCompleteTasks() + st.numFailedTasks()
+            shuffle += st.shuffleWriteBytes() + st.shuffleReadBytes()
+    execs = sql_store.executionsList()
+    plans = [
+        e.physicalPlanDescription()
+        for e in (execs.apply(i) for i in range(execs.size()))
+        if e.description() == group
+    ]
+    trace = {
+        "jobs": len(jobs),
+        "tasks": tasks,
+        "shuffle_bytes": shuffle,
+        "plans": plans,
+        "persisted": sc._jsc.getPersistentRDDs().size() != persisted,
+    }
+    return result, rows, trace
+
+
 def test_one_query_call_runs_one_fetch_job(spark, webtext, wt_index, monkeypatch):
     """On a materialized index with the default docid bucket count (64
     cached partitions), a one-query call is scored on the driver: the call
     and the collect of its result run exactly one job (the JVM fetch of the
-    matched blocks) with no shuffle, no Python stage above the cached scan,
-    no new broadcast and no new persisted RDD. Degenerate queries take the
-    same route and match the oracle, or return the empty result with no job
-    at all."""
+    matched blocks, at most ``defaultParallelism`` tasks) with no shuffle,
+    no Python stage above the cached scan, no new broadcast and no new
+    persisted RDD. Degenerate queries take the same route and match the
+    oracle, or return the empty result with no job at all."""
     from rustserini_spark.operators.search import RESULT_SCHEMA
     from rustserini_spark.operators.webtext import auto_id_buckets
 
     sc = spark.sparkContext
     index = wt_index.index
     corpus = _oracle_corpus(webtext, wt_index.docmap)
-    stage_store = sc._jsc.sc().statusStore()
-    sql_store = spark._jsparkSession.sharedState().statusStore()
     broadcasts = []
     real_broadcast = sc.broadcast
     monkeypatch.setattr(sc, "broadcast", lambda v: broadcasts.append(v) or real_broadcast(v))
     assert auto_id_buckets(N_DOCS) == 64
+    assert index.postings.rdd.getNumPartitions() == 64 > sc.defaultParallelism
 
     def call(tag: str, query: str, k: int):
-        group = f"routed-{tag}"
-        persisted = sc._jsc.getPersistentRDDs().size()
-        sc.setJobGroup(group, group)
-        try:
-            result = bm25_search_pruned(index, [(tag, query)], k=k)
-            rows = result.collect()
-        finally:
-            sc.setLocalProperty("spark.jobGroup.id", None)
-            sc.setLocalProperty("spark.job.description", None)
+        result, rows, trace = _traced_search(spark, index, [(tag, query)], k, f"routed-{tag}")
         assert result.schema == RESULT_SCHEMA, tag
-        assert sc._jsc.getPersistentRDDs().size() == persisted, tag
+        assert not trace["persisted"], tag
         assert not broadcasts, tag
-        jobs = sc.statusTracker().getJobIdsForGroup(group)
-        for jid in jobs:
-            for sid in sc.statusTracker().getJobInfo(jid).stageIds:
-                st = stage_store.lastStageAttempt(sid)
-                assert st.shuffleWriteBytes() == st.shuffleReadBytes() == 0, tag
-        execs = sql_store.executionsList()
-        plans = [
-            e.physicalPlanDescription()
-            for e in (execs.apply(i) for i in range(execs.size()))
-            if e.description() == group
-        ]
-        for plan in plans:
+        assert trace["shuffle_bytes"] == 0, tag
+        assert trace["tasks"] <= sc.defaultParallelism, (tag, trace["tasks"])
+        for plan in trace["plans"]:
             # the nodes this call ran, above the cached relation's scan
             ran = plan.split("InMemoryTableScan")[0]
             for node in ("Exchange", "InPandas", "InArrow", "EvalPython", "Broadcast"):
                 assert node not in ran, (tag, node, ran)
         # the fetch is the one execution that reads the cache; collecting
         # the local result is an execution without a job
-        return rows, len(jobs), sum("InMemoryTableScan" in p for p in plans)
+        return rows, trace["jobs"], sum("InMemoryTableScan" in p for p in trace["plans"])
 
     for tag, query in [
         ("empty", ""),
@@ -264,6 +286,66 @@ def test_one_query_call_runs_one_fetch_job(spark, webtext, wt_index, monkeypatch
         assert [r[1] for r in got] == [d for d, _ in expected], tag
         for (_, _, s), (_, es) in zip(got, expected):
             assert s == pytest.approx(es, abs=1e-9)
+
+
+def test_batch_below_the_pair_cut_runs_one_fetch_job(spark, wt_index, pruned_routes, monkeypatch):
+    """A 300-query batch whose (query, posting) pairs are within the driver
+    route's cut runs like a one-query call on the 64-bucket index: one job
+    of at most ``defaultParallelism`` tasks, no shuffle, no Python stage,
+    exchange or window, no new broadcast and nothing persisted, and ranks
+    equal to ``bm25_search``'s. The same batch just above the cut runs
+    doc-aligned and matches too."""
+    import numpy as np
+
+    from rustserini_spark.operators import search
+    from rustserini_spark.operators.search import bm25_search, query_terms_local
+
+    index = wt_index.index
+    rng = np.random.default_rng(17)
+    words = [f"w{i:04d}" for i in range(3, 400)]
+    pairs = [
+        (f"b{i}", " ".join(rng.choice(words, int(rng.integers(1, 4)))) + (" zzqxv" if i % 9 == 0 else ""))
+        for i in range(300)
+    ]
+    qt_rows, terms = query_terms_local(pairs, index.analyzer)
+    stats = index.idf_for_terms(terms)
+    n_pairs = sum(stats[t][1] for _, t, _ in qt_rows if t in stats)
+    assert len(qt_rows) > 256 and 0 < n_pairs <= search.DRIVER_ROUTE_MAX_PAIRS
+
+    def ranks(rows):
+        out: dict[str, list] = {}
+        for r in rows:
+            out.setdefault(r.qid, []).append((r.rank, r.doc_id, r.score))
+        return {q: sorted(v) for q, v in out.items()}
+
+    expected = ranks(bm25_search(index, pairs, k=10).collect())
+    assert len(expected) > 250
+
+    def same_as_exhaustive(got):
+        assert set(got) == set(expected)
+        for qid, rows in got.items():
+            assert [r[:2] for r in rows] == [r[:2] for r in expected[qid]], qid
+            np.testing.assert_allclose([r[2] for r in rows], [r[2] for r in expected[qid]], atol=1e-9)
+
+    sc = spark.sparkContext
+    broadcast_before = index.meta.get("_qstate_broadcast")
+    result, rows, trace = _traced_search(spark, index, pairs, 10, "routed-batch")
+    assert pruned_routes.route_of(result) == "driver"
+    assert trace["jobs"] == 1 and trace["shuffle_bytes"] == 0, trace
+    assert trace["tasks"] <= sc.defaultParallelism, trace["tasks"]
+    assert not trace["persisted"]
+    assert index.meta.get("_qstate_broadcast") is broadcast_before
+    for plan in trace["plans"]:
+        # the nodes this call ran, above the cached relation's scan
+        ran = plan.split("InMemoryTableScan")[0]
+        for node in ("MapInPandas", "Exchange", "Window"):
+            assert node not in ran, (node, ran)
+    same_as_exhaustive(ranks(rows))
+
+    monkeypatch.setattr(search, "DRIVER_ROUTE_MAX_PAIRS", n_pairs - 1)
+    above = bm25_search_pruned(index, pairs, k=10)
+    assert pruned_routes.route_of(above) == "doc_aligned"
+    same_as_exhaustive(ranks(above.collect()))
 
 
 def test_checkpoint_resume(spark, webtext, tmp_path_factory):
