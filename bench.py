@@ -23,11 +23,13 @@ Protocol (self-described in the output's "protocol" field):
     "ann_ivf_topk" entry re-built the materialized index inside the timed
     probe, anti-rewarding the build-once/probe-many design).
   * "bm25_pruned_disk" opens a CHECKPOINTED index from disk (load_index) and
-    searches it through the shuffled shard-group path — the reference's
-    LuceneSearcher::new lifecycle (/root/reference/src/searcher/lucene/
-    searcher.rs:25-46); the checkpointed index is built once per session,
-    untimed, before the reps. The cached zero-shuffle path is
-    "bm25_pruned_topk".
+    searches it — the reference's LuceneSearcher::new lifecycle
+    (src/searcher/lucene/searcher.rs:25-46 in the reference); the
+    checkpointed index is built once per session, untimed, before the reps.
+    "bm25_pruned_topk" searches the freshly built, cached index. Both send
+    the same 6 queries (~70k (query, posting) pairs at sf0.1), under the
+    driver route's pair cut, so both score on the driver after one fetch
+    job; they differ in where the postings are read from.
   * after every rep the SQL cache is audited: any still-persisted RDD is a
     leak (reported in extra.cached_rdds_after_rep, expected 0) and cleared so
     no rep reads another rep's cache.
@@ -91,8 +93,12 @@ IVF_N_CENTROIDS = 16
 IVF_N_PROBE = 8
 
 
-def run_suite(spark, docs, queries_df, entry_mod, ckpt_dir: str) -> dict[str, float]:
-    """One full pass over every benchmarked operation; fresh index each call."""
+def run_suite(
+    spark, docs, queries_df, entry_mod, ckpt_dir: str, sf_dir: str
+) -> tuple[dict[str, float], dict[str, int]]:
+    """One full pass over every benchmarked operation on the tables in
+    ``sf_dir``; fresh index each call. Returns (wall seconds, output rows)
+    per operation; builds have no row count."""
     from pyspark.sql import functions as F
 
     from rustserini_spark.operators.index_build import build_index, load_index
@@ -103,11 +109,14 @@ def run_suite(spark, docs, queries_df, entry_mod, ckpt_dir: str) -> dict[str, fl
     )
 
     timings: dict[str, float] = {}
+    rows: dict[str, int] = {}
 
     def timed(name, fn):
         t0 = time.perf_counter()
         out = fn()
         timings[name] = round(time.perf_counter() - t0, 3)
+        if isinstance(out, int):
+            rows[name] = out
         return out
 
     # 1. index build (the reference's lucene_indexer analog), forced to
@@ -123,9 +132,10 @@ def run_suite(spark, docs, queries_df, entry_mod, ckpt_dir: str) -> dict[str, fl
     index.postings.unpersist()
     index.dictionary.unpersist()
 
-    # 2b. disk-opened lifecycle: open the prebuilt checkpointed index + search
-    #     through the shuffled shard-group path (blocks group to shards per
-    #     batch — the path a cold executor fleet takes on a warehouse index)
+    # 2b. disk-opened lifecycle: open the prebuilt checkpointed index +
+    #     search it; the batch is under the driver route's pair cut, so the
+    #     matched blocks are fetched from the parquet files and scored on the
+    #     driver
     timed(
         "bm25_pruned_disk",
         lambda: bm25_search_pruned(load_index(spark, ckpt_dir), queries_df, k=10).count(),
@@ -133,8 +143,8 @@ def run_suite(spark, docs, queries_df, entry_mod, ckpt_dir: str) -> dict[str, fl
 
     # 2c. IVF lifecycle, split: train + cell-partitioned write once (fresh dir
     #     every rep), then probe the materialized index alone
-    emb = spark.read.parquet(f"{SF_DIR}/embeddings.parquet")
-    dim = entry_mod._emb_dim(SF_DIR)
+    emb = spark.read.parquet(f"{sf_dir}/embeddings.parquet")
+    dim = entry_mod._emb_dim(sf_dir)
     ivf_dir = tempfile.mkdtemp(prefix="bench_ivf_")
     try:
         ivf = timed(
@@ -152,29 +162,34 @@ def run_suite(spark, docs, queries_df, entry_mod, ckpt_dir: str) -> dict[str, fl
     # 3. curation / dedup / similarity / encode operators from the entry contract
     q = entry_mod.queries()
     for name in BENCH_QUERIES:
-        timed(name, lambda name=name: q[name](spark, SF_DIR).count())
-    return timings
+        timed(name, lambda name=name: q[name](spark, sf_dir).count())
+    return timings, rows
 
 
-def main() -> None:
+def measure(spark, sf_dir: str, n_reps: int) -> dict:
+    """``n_reps`` passes of ``run_suite`` over ``sf_dir`` in one session.
+
+    Returns the per-rep wall seconds ("reps"), the output rows of the last
+    rep ("rows"), the RDDs still persisted after each rep ("cached_rdds",
+    expected 0; they are unpersisted so no rep reads another rep's cache)
+    and the corpus size ("n_docs")."""
     import __spark_entry__ as entry_mod
-    from rustserini_spark import get_spark
     from rustserini_spark.operators.index_build import build_index_checkpointed
 
-    spark = get_spark("bench", master=f"local[{CPUS}]", shuffle_partitions=int(CPUS))
-    docs = spark.read.parquet(f"{SF_DIR}/documents.parquet")
+    docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
     n_docs = docs.count()
     queries_df = entry_mod._queries_df(spark)
 
     # one untimed checkpointed build per session: bm25_pruned_disk times the
     # OPEN+SEARCH lifecycle, not the build (which index_build_porter covers)
     ckpt_dir = tempfile.mkdtemp(prefix="bench_ckpt_")
-    build_index_checkpointed(spark, docs, ckpt_dir, input_id=SF_DIR, analyzer="porter")
+    build_index_checkpointed(spark, docs, ckpt_dir, input_id=sf_dir, analyzer="porter")
 
     reps = []
     leaked_after_rep = []
-    for _ in range(REPS):
-        reps.append(run_suite(spark, docs, queries_df, entry_mod, ckpt_dir))
+    for _ in range(n_reps):
+        timings, rows = run_suite(spark, docs, queries_df, entry_mod, ckpt_dir, sf_dir)
+        reps.append(timings)
         # cache audit: nothing may stay persisted across reps. Remediation
         # unpersists the ACTUAL leaked RDD entries — catalog.clearCache()
         # only evicts SQL-catalog-cached plans and would leave RDD-level
@@ -187,11 +202,20 @@ def main() -> None:
                 jmap.get(k).unpersist(False)
             spark.catalog.clearCache()
     shutil.rmtree(ckpt_dir, ignore_errors=True)
+    return {"reps": reps, "rows": rows, "cached_rdds": leaked_after_rep, "n_docs": n_docs}
+
+
+def main() -> None:
+    from rustserini_spark import get_spark
+
+    spark = get_spark("bench", master=f"local[{CPUS}]", shuffle_partitions=int(CPUS))
+    run = measure(spark, SF_DIR, REPS)
+    reps, n_docs = run["reps"], run["n_docs"]
 
     timings = {k: min(r[k] for r in reps) for k in reps[0]}
     extra: dict = {
         "index_docs_per_sec": round(n_docs / timings["index_build_porter"], 1),
-        "cached_rdds_after_rep": leaked_after_rep,
+        "cached_rdds_after_rep": run["cached_rdds"],
     }
     if REPS > 1:
         # Raw per-rep timings go to a SIDE FILE, not the headline line: round 3

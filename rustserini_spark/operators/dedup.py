@@ -428,15 +428,21 @@ def _band_explode(sig: DataFrame, n_hashes: int, n_bands: int) -> DataFrame:
     return sig.selectExpr("doc_id", f"inline(array({bands}))")
 
 
+def _drop_hot_buckets(bands: DataFrame, max_bucket: int | None) -> DataFrame:
+    """``bands`` without the (band_id, band_hash) buckets holding more than
+    ``max_bucket`` rows; ``None`` keeps every bucket."""
+    if max_bucket is None:
+        return bands
+    counts = bands.groupBy("band_id", "band_hash").agg(F.count(F.lit(1)).alias("_n"))
+    return bands.join(
+        counts.filter(F.col("_n") <= max_bucket).drop("_n"), ["band_id", "band_hash"]
+    )
+
+
 def _banded_pairs(
     sig: DataFrame, n_hashes: int, n_bands: int, max_bucket: int | None
 ) -> DataFrame:
-    exploded = _band_explode(sig, n_hashes, n_bands)
-    if max_bucket is not None:
-        counts = exploded.groupBy("band_id", "band_hash").agg(F.count(F.lit(1)).alias("_n"))
-        exploded = exploded.join(
-            counts.filter(F.col("_n") <= max_bucket).drop("_n"), ["band_id", "band_hash"]
-        )
+    exploded = _drop_hot_buckets(_band_explode(sig, n_hashes, n_bands), max_bucket)
     a, b = exploded.alias("a"), exploded.alias("b")
     return (
         a.join(
@@ -451,14 +457,13 @@ def _banded_pairs(
 
 
 def build_minhash_band_table(
-    docs_or_sig: DataFrame,
+    docs: DataFrame,
     path: str,
     text_col: str = "text",
     id_col: str = "doc_id",
     n_hashes: int = N_MINHASHES,
     n_bands: int = N_BANDS,
     max_bucket: int | None = None,
-    is_sig: bool = False,
 ) -> DataFrame:
     """Materialize the PROBE-READY band table (doc_id, band_id, band_hash)
     to parquet: bands pre-exploded and hot buckets pre-dropped, so a probe
@@ -467,15 +472,9 @@ def build_minhash_band_table(
     One step further along the build-once/probe-many split than the
     signature table (which still pays band explode + cap agg per probe —
     at 500k docs that base-side work dominated the probe once the
-    universal-hash lanes made the snapshot side cheap). Pass ``is_sig=True``
-    when ``docs_or_sig`` is already a signature table."""
-    sig = docs_or_sig if is_sig else minhash_signatures(docs_or_sig, text_col, id_col, n_hashes)
-    bands = _band_explode(sig, n_hashes, n_bands)
-    if max_bucket is not None:
-        counts = bands.groupBy("band_id", "band_hash").agg(F.count(F.lit(1)).alias("_n"))
-        bands = bands.join(
-            counts.filter(F.col("_n") <= max_bucket).drop("_n"), ["band_id", "band_hash"]
-        )
+    universal-hash lanes made the snapshot side cheap)."""
+    sig = minhash_signatures(docs, text_col, id_col, n_hashes)
+    bands = _drop_hot_buckets(_band_explode(sig, n_hashes, n_bands), max_bucket)
     return barrier(bands, "minhash_bands", path)
 
 
@@ -562,15 +561,7 @@ def _probe_matches(
         # parquet scan.
         if base_sig is None:
             raise ValueError("minhash_probe_pairs needs base_sig or base_bands")
-        base_bands = _band_explode(base_sig, n_hashes, n_bands)
-        if max_bucket is not None:
-            counts = base_bands.groupBy("band_id", "band_hash").agg(
-                F.count(F.lit(1)).alias("_n")
-            )
-            base_bands = base_bands.join(
-                counts.filter(F.col("_n") <= max_bucket).drop("_n"),
-                ["band_id", "band_hash"],
-            )
+        base_bands = _drop_hot_buckets(_band_explode(base_sig, n_hashes, n_bands), max_bucket)
     if broadcast_new:
         # materialize the snapshot band relation BEFORE pinning the
         # broadcast: the broadcast build otherwise collects the computed

@@ -50,7 +50,6 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
-from rustserini_spark.analysis import analyze_col, simple_tokens_col
 from rustserini_spark.operators.compress import (
     BLOCK_SIZE_DEFAULT,
     encode_runs_blocks,
@@ -92,14 +91,6 @@ def shard_of_segment(seg: int, n_shards: int) -> int:
     seg = (pid << 32) | counter has structured low bits — a plain modulo would
     collapse segments onto few shards and serialize the query path."""
     return int(((seg * 0x9E3779B97F4A7C15) & 0xFFFFFFFFFFFFFFFF) >> 32) % n_shards
-
-
-def tokens_col_for(mode: str):
-    if mode == "porter":
-        return analyze_col
-    if mode == "simple":
-        return simple_tokens_col
-    raise ValueError(f"unknown analyzer mode {mode!r}")
 
 
 def analyze_fn_for(mode: str):

@@ -66,7 +66,7 @@ from rustserini_spark.operators.compress import (
     decode_blocks_batch,
     decode_posting_block,
 )
-from rustserini_spark.operators.index_build import BM25Index, tokens_col_for
+from rustserini_spark.operators.index_build import BM25Index
 from rustserini_spark.session import col_in, local_rows_df
 
 # Above this many analyzed (qid, term) rows the pruned path's driver-side
@@ -134,27 +134,12 @@ RESULT_SCHEMA = T.StructType(
 )
 
 
-def query_terms(queries: DataFrame, analyzer: str, qid_col: str = "qid", query_col: str = "query") -> DataFrame:
-    """(qid, term, qtf): a duplicated query term scores once per occurrence in
-    Lucene's BooleanQuery, i.e. its contribution is multiplied by qtf.
-
-    Distributed variant — use for huge query batches (millions of rows).
-    Interactive search uses query_terms_local instead: a handful of query
-    strings does not justify a Python-UDF stage across the cluster.
-    """
-    tok = tokens_col_for(analyzer)
-    return (
-        queries.select(F.col(qid_col).cast("string").alias("qid"), tok(query_col).alias("terms"))
-        .select("qid", F.explode("terms").alias("term"))
-        .groupBy("qid", "term")
-        .agg(F.count(F.lit(1)).alias("qtf"))
-    )
-
-
 def query_terms_local(queries, analyzer: str, qid_col: str = "qid", query_col: str = "query"):
     """Driver-side query analysis with the SAME shared analyze function the
     index build uses (parity by construction). Returns (rows, terms): rows =
     [(qid, term, qtf)], terms = sorted distinct term list for scan pruning.
+    A duplicated query term scores once per occurrence in Lucene's
+    BooleanQuery, so its contribution is multiplied by qtf.
 
     ``queries`` is a DataFrame OR a plain list of (qid, query) pairs — the
     reference's batch_search takes Vec<String> directly

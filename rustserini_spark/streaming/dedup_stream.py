@@ -43,6 +43,7 @@ from rustserini_spark.operators.dedup import (
     minhash_probe_pairs,
     snapshot_minhash_signatures,
 )
+from rustserini_spark.session import barrier
 
 SEG_PREFIX = "seg_"
 BASE_DIR_NAME = "base"
@@ -91,8 +92,7 @@ def dedup_batch(
     # materialize the batch signatures once: consumed by the within-batch
     # self-join (2 branches), the probe, and the survivor-signature write
     sig_stage = os.path.join(sig_dir, f"_stage_{batch_id:06d}")
-    batch_sig.write.mode("overwrite").parquet(sig_stage)
-    batch_sig = spark.read.parquet(sig_stage)
+    batch_sig = barrier(batch_sig, "dedup_stage", sig_stage)
 
     # 1. within-batch: keeper-first (drop the larger id of each candidate)
     within = _banded_pairs(batch_sig, n_hashes, n_bands, max_bucket)

@@ -67,6 +67,7 @@ from rustserini_spark.operators.index_build import (
     encode_postings,
     lucene_idf,
 )
+from rustserini_spark.session import barrier
 
 SEG_PREFIX = "seg_"
 MAX_GROUP_DEFAULT = 1 << 16  # max postings per compacted (term, shard, salt) run
@@ -112,8 +113,7 @@ def write_segment(
     postings = encode_postings(
         docs, text_col, id_col, analyzer, block_size, n_shards, seg_docs
     )
-    postings.write.mode("overwrite").parquet(os.path.join(seg_dir, "postings"))
-    postings = spark.read.parquet(os.path.join(seg_dir, "postings"))
+    postings = barrier(postings, "segment_postings", os.path.join(seg_dir, "postings"))
 
     n_docs = docs.count()
     sum_dl = int(postings.agg(F.sum("block_cf")).collect()[0][0] or 0)
@@ -322,20 +322,7 @@ def merge_all_segments(
     tmp = os.path.join(base_dir, "_merge_tmp")
     if os.path.exists(tmp):
         shutil.rmtree(tmp)  # leftover from a crashed merge — never committed
-    tf = decoded_postings(seg_index.postings)
-    dictionary = dictionary_from_postings(
-        seg_index.postings, seg_index.n_docs, seg_index.avgdl or 1.0,
-        seg_index.k1, seg_index.b,
-    )
-    postings = _sorted_postings(
-        tf, dictionary.select("term", "df"), seg_index.block_size,
-        max_group, seg_index.n_shards,
-    )
-    postings.repartition("term").sortWithinPartitions(
-        "term", "shard", "salt", "block_seq"
-    ).write.mode("overwrite").parquet(os.path.join(tmp, "postings"))
-    dictionary.write.mode("overwrite").parquet(os.path.join(tmp, "dictionary"))
-    seg_index.doclen.write.mode("overwrite").parquet(os.path.join(tmp, "doclen"))
+    _write_merged(seg_index, tmp, max_group, seg_index.n_shards)
     with open(os.path.join(tmp, "stats.json"), "w") as f:
         json.dump(
             {
@@ -437,6 +424,28 @@ def decoded_postings(postings: DataFrame) -> DataFrame:
     return postings.mapInPandas(run, "term string, doc_id long, dl long, tf long")
 
 
+def _write_merged(seg_index: BM25Index, out_dir: str, max_group: int, n_shards: int) -> None:
+    """Write ``seg_index``'s segments to ``out_dir`` as one dense index:
+    decoded blocks re-encoded into doc-hash-sharded postings, the dictionary
+    under the global stats, and the doclen table."""
+    dictionary = dictionary_from_postings(
+        seg_index.postings, seg_index.n_docs, seg_index.avgdl or 1.0,
+        seg_index.k1, seg_index.b,
+    )
+    postings = _sorted_postings(
+        decoded_postings(seg_index.postings),
+        dictionary.select("term", "df"),
+        seg_index.block_size,
+        max_group,
+        n_shards,
+    )
+    postings.repartition("term").sortWithinPartitions(
+        "term", "shard", "salt", "block_seq"
+    ).write.mode("overwrite").parquet(os.path.join(out_dir, "postings"))
+    dictionary.write.mode("overwrite").parquet(os.path.join(out_dir, "dictionary"))
+    seg_index.doclen.write.mode("overwrite").parquet(os.path.join(out_dir, "doclen"))
+
+
 def compact_segments(
     spark: SparkSession,
     base_dir: str,
@@ -448,23 +457,7 @@ def compact_segments(
     block-compressed postings + dictionary with exact global stats."""
     seg_index = open_segmented_index(spark, base_dir)
     n_shards = n_shards or seg_index.n_shards
-    tf = decoded_postings(seg_index.postings)
-    dictionary = dictionary_from_postings(
-        seg_index.postings, seg_index.n_docs, seg_index.avgdl or 1.0,
-        seg_index.k1, seg_index.b,
-    )
-    postings = _sorted_postings(
-        tf,
-        dictionary.select("term", "df"),
-        seg_index.block_size,
-        max_group,
-        n_shards,
-    )
-    postings.repartition("term").sortWithinPartitions("term", "shard", "salt", "block_seq").write.mode(
-        "overwrite"
-    ).parquet(os.path.join(out_dir, "postings"))
-    dictionary.write.mode("overwrite").parquet(os.path.join(out_dir, "dictionary"))
-    seg_index.doclen.write.mode("overwrite").parquet(os.path.join(out_dir, "doclen"))
+    _write_merged(seg_index, out_dir, max_group, n_shards)
     with open(os.path.join(out_dir, "index.json"), "w") as f:
         json.dump(
             {

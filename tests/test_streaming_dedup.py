@@ -26,6 +26,10 @@ FRESH_A = "entirely novel text about alpine glacier meltwater chemistry models"
 FRESH_B = "another unique page describing tidal resonance in shallow coastal basins"
 FRESH_C = "observations of stratospheric aerosol transport following volcanic events"
 
+# Spark jobs one dedup_batch call runs on batch 0 of the sequence test (18
+# while the staged signatures' read-back inferred its schema)
+JOBS_PER_BATCH = 17
+
 
 def _df(spark, rows):
     return spark.createDataFrame(pd.DataFrame(rows, columns=["doc_id", "text"]))
@@ -40,12 +44,19 @@ def seeded_sig_dir(spark, tmp_path):
     return sig_dir
 
 
-def test_dedup_batch_sequence_and_growing_store(spark, seeded_sig_dir, tmp_path):
+def test_dedup_batch_sequence_and_growing_store(
+    spark, seeded_sig_dir, tmp_path, jobs_in_group
+):
     out_dir = str(tmp_path / "out")
     # batch 0: base copy (drop), fresh A (keep), within-batch copy of A
     # (keeper-first: 101 kept, 102 dropped), fresh B (keep)
     b0 = _df(spark, [(100, BASE0), (101, FRESH_A), (102, FRESH_A), (103, FRESH_B)])
-    dedup_batch(spark, b0, 0, seeded_sig_dir, out_dir)
+    n_jobs = jobs_in_group(
+        "dedup_batch_0", lambda: dedup_batch(spark, b0, 0, seeded_sig_dir, out_dir)
+    )
+    # the staged signatures read back through session.barrier with the
+    # written schema: no footer-inference job
+    assert n_jobs == JOBS_PER_BATCH, n_jobs
     # batch 1: copy of batch-0 SURVIVOR A (drop: the store grew), base copy
     # (drop), fresh C (keep)
     b1 = _df(spark, [(200, FRESH_A), (201, BASE1), (202, FRESH_C)])

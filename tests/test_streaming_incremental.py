@@ -209,6 +209,20 @@ def test_merge_all_segments_unit(spark, documents, tmp_path_factory):
     assert not os.path.exists(f"{segs}/seg_000000")
 
 
+def test_write_segment_job_count(spark, documents, tmp_path_factory, jobs_in_group):
+    """The segment's postings read back through session.barrier with the
+    written schema, so no job infers it from the parquet footers."""
+    from rustserini_spark.streaming.incremental import write_segment
+
+    segs = str(tmp_path_factory.mktemp("segment_jobs"))
+    docs = documents.select("doc_id", "text")
+    n_jobs = jobs_in_group(
+        "write_segment", lambda: write_segment(spark, docs, f"{segs}/seg_000000", batches=[0])
+    )
+    # 12 while the read-back inferred its schema
+    assert n_jobs == 11, n_jobs
+
+
 def test_merge_reclaims_statsless_orphan_dirs(spark, documents, tmp_path_factory):
     """A QUIET seg_* dir lacking stats.json (crash between the stats remove
     and the rmtree, or a crashed mid-write) is reclaimed by the next merge's
